@@ -10,112 +10,13 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
-
-    // TIMING METHODOLOGY (r20): every query is warmed INLINE — one untimed
-    // run immediately before its own timed slot — so every reported number
-    // measures a back-to-back SECOND execution, exactly what the median
-    // reps measure. History: r15-r17 warmed a hand-curated class list at
-    // sf0.001, r18 warmed it up-front at the bench SF, r19 moved the list
-    // inline — and each round a NEW query breached the 3x one-shot/median
-    // criterion because first-touch costs (MLlib task JIT, persist
-    // materialization, shuffle-file allocation, metrics-store build, OS
-    // page-cache cold parquet reads) kept moving to whichever query paid
-    // them first. Warming EVERYTHING makes the criterion structural: a
-    // one-shot can only exceed its median through a genuine plan defect or
-    // host load, never first-touch. Cost: timed-work is doubled (untimed
-    // warm == timed run), which the "timing" field in the JSON documents —
-    // r20+ one-shots are warm-run numbers, comparable to medians of any
-    // round but NOT to pre-r19 cold one-shots.
-
     // Forensics knobs (default = the driver's exact behavior):
     //   SPARK_GRAFT_BENCH_ONLY  comma-separated query-name filter
-    //   SPARK_GRAFT_BENCH_ORDER "alpha" (default) | "reverse"
     //   SPARK_GRAFT_BENCH_REPS  run the whole set N times; report per-query MEDIAN
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(n => only.forall(_(n)))
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "1").toInt
-    val sortedAll = SparkEntry.queries.toSeq.sortBy(_._1)
-    val ordered0 = only.fold(sortedAll)(keep => sortedAll.filter(q => keep(q._1)))
-    val ordered =
-      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("reverse")) ordered0.reverse
-      else ordered0
-
-    // A query failing in ANY rep marks it failed in the JSON line: silent
-    // shrinkage (r9's 58 instant "timings") must be machine-visible, not
-    // just a stderr line the driver's parser never reads.
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        warm: Boolean = false): Double = {
-      if (warm) {
-        // untimed back-to-back warm run with the exact per-query hygiene the
-        // timed run gets (clear + unpersist + GC settle), so the timed
-        // one-shot starts from the same state a median rep would
-        val w0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        val wdt = (System.nanoTime() - w0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-        // same settle policy as the post-timed hygiene: only heavy runs
-        // leave enough concurrent-GC debt to justify a sleep (370 queries
-        // x 250 ms would add ~90 s of pure sleep otherwise)
-        if (wdt > 2.0) { Thread.sleep(250); System.gc() }
-      }
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch {
-        case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // Per-query hygiene: drop DataFrame caches (e.g. the SGD feature
-      // persist) and the RDD blocks MLlib fits (ALS/KMeans/RF) leave
-      // persisted, so no query's memory pinning bleeds into the next one's
-      // measurement. Cleanup cost is excluded from the per-query time.
-      // blocking: eviction must finish OUTSIDE this query's timed region,
-      // not race into the next one's
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // settle GC debt outside the timed region too: a heap-heavy query's
-      // collection otherwise lands in the NEXT query's wall-clock (the
-      // r05 q_json_extract 12x spike sat right after the heaviest query).
-      // After a heavy query, System.gc() only *requests* a cycle — G1's
-      // concurrent phases can still be running when the next timer starts
-      // (r8 driver artifact showed 1.6-2.3x spikes on the queries right
-      // after the heap-heaviest ones under driver load; local isolation
-      // runs showed none) — so gc twice and give the concurrent threads a
-      // moment to drain before the next timed region.
-      System.gc()
-      if (dt > 2.0) { Thread.sleep(250); System.gc() }
-      dt
-    }
-    def runOnce(): Seq[(String, Double)] =
-      ordered.map { case (name, fn) => name -> timeQuery(name, fn, warm = true) }
-
-    val runs = (1 to reps).map(_ => runOnce())
-    val results: Seq[(String, Double)] =
-      if (reps == 1) runs.head
-      else ordered.map(_._1).zipWithIndex.map { case (name, i) =>
-        val samples = runs.map(_(i)._2).sorted
-        name -> samples(samples.length / 2)
-      }
-    val qs = results
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-
     // Self-reconciling medians: the gate host runs under unpredictable
     // load, which has manufactured 3-10x phantom regressions in single-shot
     // wall times two rounds running (r11: q_pagerank; r12: q_rf_metrics
@@ -130,23 +31,9 @@ object Bench {
     // artifact.
     val medTop = sys.env.getOrElse("SPARK_GRAFT_BENCH_MEDIANS_TOP", "20").toInt
     val medReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_MEDIANS_REPS", "3").toInt
-    val medians: Seq[(String, Double)] =
-      if (medTop <= 0 || medReps <= 0) Nil
-      else {
-        val byName = ordered.toMap
-        results.filterNot { case (n, _) => failed.contains(n) }
-          .sortBy(-_._2).take(medTop)
-          .map { case (name, _) =>
-            val samples = (1 to medReps).map(_ => timeQuery(name, byName(name))).sorted
-            name -> samples(samples.length / 2)
-          }
-      }
-    val mediansJson = medians
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val failedList = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"warm-second-run","queries":$qs,"failed":${failed.size},"failed_queries":$failedList,"medians":$mediansJson,"median_reps":$medReps,"sf":"$sfDir"}"""
+
+    val spark = GraftSession.harness()
+    val line = run(spark, sfDir, names, reps, medTop, medReps)
     println(line)
     // sbt interleaves the stdout line with log noise, which has cost the
     // round driver its parse before — persist the same line to a file too.
@@ -155,5 +42,106 @@ object Bench {
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] write $out failed: $e") }
     spark.stop()
+  }
+
+  /** Times `names` (in the given order) `reps` times at `sfDir`, then the
+    * `medTop` slowest `medReps` more times each, and returns the one-line
+    * JSON result.
+    *
+    * TIMING METHODOLOGY (r20): every query is warmed INLINE — one untimed
+    * run immediately before its own timed slot — so every reported number
+    * measures a back-to-back SECOND execution, exactly what the median
+    * reps measure. History: r15-r17 warmed a hand-curated class list at
+    * sf0.001, r18 warmed it up-front at the bench SF, r19 moved the list
+    * inline — and each round a NEW query breached the 3x one-shot/median
+    * criterion because first-touch costs (MLlib task JIT, persist
+    * materialization, shuffle-file allocation, metrics-store build, OS
+    * page-cache cold parquet reads) kept moving to whichever query paid
+    * them first. Warming EVERYTHING makes the criterion structural: a
+    * one-shot can only exceed its median through a genuine plan defect or
+    * host load, never first-touch. Cost: timed-work is doubled (untimed
+    * warm == timed run), which the "timing" field in the JSON documents —
+    * r20+ one-shots are warm-run numbers, comparable to medians of any
+    * round but NOT to pre-r19 cold one-shots.
+    */
+  def run(
+      spark: SparkSession,
+      sfDir: String,
+      names: Seq[String],
+      reps: Int,
+      medTop: Int,
+      medReps: Int): String = {
+    val queries = SparkEntry.queries
+    // A query failing in ANY rep marks it failed in the JSON line: silent
+    // shrinkage (r9's 58 instant "timings") must be machine-visible, not
+    // just a stderr line the driver's parser never reads.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def noop(name: String): Unit =
+      queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    def timeQuery(name: String, warm: Boolean = false): Double = {
+      if (warm) {
+        // untimed back-to-back warm run with the exact per-query hygiene the
+        // timed run gets, so the timed one-shot starts from the same state a
+        // median rep would
+        val w0 = System.nanoTime()
+        try noop(name)
+        catch { case _: Throwable => () }
+        settle(spark, (System.nanoTime() - w0) / 1e9)
+      }
+      val t0 = System.nanoTime()
+      try noop(name)
+      catch {
+        case e: Throwable =>
+          failed += name
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      }
+      val dt = (System.nanoTime() - t0) / 1e9
+      settle(spark, dt)
+      dt
+    }
+
+    val runs = (1 to reps).map(_ => names.map(name => name -> timeQuery(name, warm = true)))
+    val results: Seq[(String, Double)] =
+      if (reps == 1) runs.head
+      else names.zipWithIndex.map { case (name, i) =>
+        val samples = runs.map(_(i)._2).sorted
+        name -> samples(samples.length / 2)
+      }
+    val qs = results
+      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+    val total = results.map(_._2).sum
+
+    val medians: Seq[(String, Double)] =
+      if (medTop <= 0 || medReps <= 0) Nil
+      else
+        results.filterNot { case (n, _) => failed.contains(n) }
+          .sortBy(-_._2).take(medTop)
+          .map { case (name, _) =>
+            val samples = (1 to medReps).map(_ => timeQuery(name)).sorted
+            name -> samples(samples.length / 2)
+          }
+    val mediansJson = medians
+      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+    val failedList = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","timing":"warm-second-run","queries":$qs,"failed":${failed.size},"failed_queries":$failedList,"medians":$mediansJson,"median_reps":$medReps,"sf":"$sfDir"}"""
+  }
+
+  /** Per-query hygiene, outside every timed region: [[GraftSession.release]]
+    * (no query's memory pinning bleeds into the next one's measurement),
+    * then settle GC debt — a heap-heavy query's collection otherwise lands
+    * in the NEXT query's wall-clock (the r05 q_json_extract 12x spike sat
+    * right after the heaviest query). After a heavy run, System.gc() only
+    * *requests* a cycle — G1's concurrent phases can still be running when
+    * the next timer starts (r8: 1.6-2.3x spikes right after the heap-
+    * heaviest queries under driver load) — so gc twice and give the
+    * concurrent threads a moment to drain. Only runs over 2 s leave enough
+    * debt to justify the sleep (370 queries x 250 ms would add ~90 s).
+    */
+  private def settle(spark: SparkSession, runSeconds: Double): Unit = {
+    GraftSession.release(spark)
+    System.gc()
+    if (runSeconds > 2.0) { Thread.sleep(250); System.gc() }
   }
 }

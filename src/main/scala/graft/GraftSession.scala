@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session helpers shared by Verify / Bench / tests.
+/** Session helpers shared by Verify / Bench / the dev tools / tests.
   *
   * The reference tunes its sessions at script level (8g driver,
   * shuffle.partitions=200 batch / 10 streaming, AQE + Kryo on the cluster —
@@ -168,5 +168,25 @@ object GraftSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     tune(s)
+  }
+
+  /** The harness session (Bench, Verify, DumpPlans, ShowQ): [[local]] with
+    * n cores and n shuffle partitions, n = `SPARK_GRAFT_CPUS`, or the
+    * host's available processors when that is unset.
+    */
+  def harness(): SparkSession = {
+    val n = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+    local(n, shufflePartitions = n)
+  }
+
+  /** Release every block a query left behind: DataFrame caches (e.g. the
+    * SGD feature persist), RDDs MLlib fits persist (ALS/KMeans/RF) and the
+    * iterative operators' localCheckpoint frames. Blocking, so eviction
+    * finishes before the caller's next timed region starts.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 }

@@ -1,21 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.streaming.MetricsStore
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     new java.io.File(outDir).mkdirs()
     // Queries are independent jobs on one thread-safe SparkSession: run a few
     // concurrently so small queries overlap the iterative ML fits instead of
@@ -60,20 +51,11 @@ object Verify {
     spark.sparkContext.getPersistentRDDs.values
       .filterNot(_.isCheckpointed)
       .foreach(_.unpersist(blocking = false))
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = only.fold(SparkEntry.oracleSql)(k => SparkEntry.oracleSql.filter(o => k(o._1)))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // toJson escapes backslash, quote and ALL control chars (<0x20) — a
+    // tab or CR in builder-authored SQL would otherwise make the driver's
+    // json.load fail and silently zero the round's correctness.
+    val json = MetricsStore.toJson(
+      only.fold(SparkEntry.oracleSql)(k => SparkEntry.oracleSql.filter(o => k(o._1))))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -30,6 +30,10 @@ import org.apache.spark.sql.types._
   *     matching the ANSI Subtract/Multiply/Add the HOF lambda builds —
   *     bounded micro inputs never reach it, but the failure mode must not
   *     silently wrap where the HOF would raise.
+  *
+  * Error-path divergence: the kernel returns null at the FIRST null
+  * element, while zip_with materializes the whole intermediate array, so
+  * the HOF can still throw on an overflow at a later position.
   */
 object LongSqDist {
 

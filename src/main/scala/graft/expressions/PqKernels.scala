@@ -30,6 +30,12 @@ import org.apache.spark.sql.types._
   *     null code → null; null table cell → null; both empty → 0.0;
   *   - an out-of-range code throws (ANSI element_at parity — encode never
   *     emits one, but the failure mode must not silently become null).
+  *
+  * Error-path divergences of [[adcSumKernel]] from that spelling: it
+  * returns null at the FIRST null element, while the HOF evaluates every
+  * position and can still throw on a later out-of-range code; and ANSI
+  * element_at resolves a negative index from the end (code <= -2 returns a
+  * value), while the kernel throws on any negative code.
   */
 object PqKernels {
 

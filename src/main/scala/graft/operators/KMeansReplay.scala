@@ -47,7 +47,7 @@ object KMeansReplay {
   /** Nearest-center assignment under the exact-integer distance:
     * `(vec_id, cid, dist)`, ties to the smaller cid.
     */
-  private[graft] def assign(
+  private[operators] def assign(
       spark: SparkSession,
       pts: DataFrame,
       centers: Seq[(Long, Seq[Long])]): DataFrame = {
@@ -132,27 +132,6 @@ object KMeansReplay {
         (cid, dims.toSeq)
       }
       .sortBy(_._1)
-  }
-
-  /** Dev-only: [[trainedCenters]] with per-round wall-time prints (used by
-    * `graft.tools.ProfileSemDedup`; no production caller).
-    */
-  private[graft] def trainedCentersProfiled(
-      spark: SparkSession,
-      pts: DataFrame,
-      k: Int,
-      rounds: Int): Seq[(Long, Seq[Long])] = {
-    val t0 = System.nanoTime()
-    var centers = seedCenters(pts, k)
-    println(f"[profile]   seed               ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    var r = 0
-    while (r < rounds) {
-      val t1 = System.nanoTime()
-      centers = lloydRound(spark, pts, centers)
-      println(f"[profile]   round $r            ${(System.nanoTime() - t1) / 1e9}%.2f s")
-      r += 1
-    }
-    centers
   }
 
   /** Final per-point assignment after `rounds` center updates:

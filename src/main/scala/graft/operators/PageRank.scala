@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * GraphX/GraphFrames iterative practice). The loop-invariant
   * degree-annotated edge list, node list and 1-row count are checkpointed
   * once up front. Checkpoint blocks are executor-local (non-reliable);
-  * the session-hygiene sweep (`getPersistentRDDs` + unpersist, as
-  * Bench/Verify do between queries) reclaims them.
+  * the session-hygiene sweep (`GraftSession.release`, which Bench runs
+  * between queries) reclaims them.
   *
   * PRODUCTION POSTURE for the localCheckpoint discipline (here and in every
   * operator that cites this scaladoc — Components, LabelPropagation, KCore,

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.collection.mutable
 
@@ -30,16 +30,7 @@ final class MetricsStore(path: String, historyLimit: Int = 1000) extends Metrics
   def update(current: Map[String, Any]): Unit = synchronized {
     history.enqueue(current)
     while (history.size > historyLimit) history.dequeue()
-    val doc = Map("current" -> current, "history" -> history.toSeq)
-    val target = Paths.get(path)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    // unique temp name: CONCURRENT writers to the same path (e.g. two
-    // replays of the same dataset) must each move their own temp file —
-    // a shared ".tmp" makes one writer's move race the other's write
-    val tmp: Path = Paths.get(
-      path + ".tmp." + java.util.UUID.randomUUID().toString.take(8))
-    Files.write(tmp, MetricsStore.toJson(doc).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    MetricsStore.writeAtomic(path, Map("current" -> current, "history" -> history.toSeq))
   }
 
   def latest: Option[Map[String, Any]] = synchronized(history.lastOption)
@@ -108,14 +99,34 @@ object MetricsStore {
     * the same temp-file-then-atomic-move discipline as `update` — the one
     * place that owns the document shape for the zero-batch case.
     */
-  def writeEmpty(path: String): Unit = {
+  def writeEmpty(path: String): Unit =
+    writeAtomic(path, Map("current" -> Map.empty[String, Any], "history" -> Seq.empty[Any]))
+
+  /** Temp-file-then-atomic-move write of one store document, so the
+    * dashboard process never reads a torn file.
+    */
+  private def writeAtomic(path: String, doc: Map[String, Any]): Unit = {
     val target = Paths.get(path)
     Option(target.getParent).foreach(Files.createDirectories(_))
+    // unique temp name: CONCURRENT writers to the same path (e.g. two
+    // replays of the same dataset) must each move their own temp file —
+    // a shared ".tmp" makes one writer's move race the other's write
     val tmp = Paths.get(path + ".tmp." + java.util.UUID.randomUUID().toString.take(8))
-    Files.write(tmp, toJson(Map("current" -> Map.empty[String, Any],
-      "history" -> Seq.empty[Any])).getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Files.write(tmp, toJson(doc).getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** The store document as a one-row frame. A torn/corrupt file is an
+    * ERROR, not an empty store — the atomic-move discipline means this
+    * should never happen; don't mask it.
+    */
+  private def readDocument(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.DataFrame = {
+    val raw = spark.read.option("multiLine", "true").json(path)
+    require(!raw.schema.fieldNames.contains("_corrupt_record"),
+      s"metrics store at $path is not valid JSON (corrupt record)")
+    raw
   }
 
   /** §2.11 serving-plane reads: load the metrics document as DataFrames so
@@ -126,11 +137,7 @@ object MetricsStore {
   def historyFrame(spark: org.apache.spark.sql.SparkSession, path: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{ArrayType, StructType}
-    val raw = spark.read.option("multiLine", "true").json(path)
-    // a torn/corrupt file is an ERROR, not an empty store — the atomic-
-    // move discipline means this should never happen; don't mask it
-    require(!raw.schema.fieldNames.contains("_corrupt_record"),
-      s"metrics store at $path is not valid JSON (corrupt record)")
+    val raw = readDocument(spark, path)
     // an EMPTY store ({"history": []}) infers history as array<string> (or
     // drops it) — star-expanding that throws; hand back the empty frame
     // with the document schema instead
@@ -163,9 +170,7 @@ object MetricsStore {
   def predictionTable(spark: org.apache.spark.sql.SparkSession, path: String, n: Int = 20): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{ArrayType, StructType}
-    val raw = spark.read.option("multiLine", "true").json(path)
-    require(!raw.schema.fieldNames.contains("_corrupt_record"),
-      s"metrics store at $path is not valid JSON (corrupt record)")
+    val raw = readDocument(spark, path)
     val structured = raw.schema.find(_.name == "current").map(_.dataType).exists {
       case s: StructType => s.find(_.name == "predictions").map(_.dataType).exists {
         case ArrayType(_: StructType, _) => true

@@ -8,8 +8,8 @@ import graft.{GraftSession, SparkEntry}
   *
   * `sbt "runMain graft.tools.DumpPlans /root/testdata/sf0.1 plans/r20 after q_pagerank ..."`
   *
-  * Uses the Bench session shape (local[32], shuffle.partitions=32) so the
-  * dumped plans are the plans the bench actually runs. Building an
+  * Uses the Bench session shape ([[GraftSession.harness]]) so the dumped
+  * plans are the plans the bench actually runs. Building an
   * iterative query executes its driver-side training; the dumped plan is
   * the returned frame's (post-checkpoint) plan — for those, the loop-body
   * shape is asserted by PlanSpec pins instead.
@@ -17,7 +17,7 @@ import graft.{GraftSession, SparkEntry}
 object DumpPlans {
   def main(args: Array[String]): Unit = {
     val Array(dir, outDir, tag, names @ _*) = args
-    val spark = GraftSession.local(32, shufflePartitions = 32)
+    val spark = GraftSession.harness()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
@@ -27,8 +27,7 @@ object DumpPlans {
         java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"),
         plan.getBytes("UTF-8"))
       println(s"[dumpplans] wrote $outDir/${name}_$tag.txt")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      GraftSession.release(spark)
     }
     spark.stop()
   }

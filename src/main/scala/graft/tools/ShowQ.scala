@@ -3,22 +3,20 @@ package graft.tools
 import graft.{GraftSession, SparkEntry}
 
 /** Dev utility: print a few rows + row count of one or more
-  * `SparkEntry.queries` entries at a given SF dir.
+  * `SparkEntry.queries` entries at a given SF dir, in the Bench session
+  * shape ([[GraftSession.harness]]); [[DumpPlans]] writes their plans.
   * `sbt "runMain graft.tools.ShowQ /root/testdata/sf0.01 q_naive_bayes"`.
   */
 object ShowQ {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8, shufflePartitions = 8)
+    val spark = GraftSession.harness()
     val dir = args.head
-    val showPlan = sys.env.contains("SPARK_GRAFT_SHOWQ_PLAN")
     args.tail.foreach { name =>
       val df = SparkEntry.queries(name)(spark, dir)
       println(s"== $name ==")
-      if (showPlan) println(df.queryExecution.executedPlan.toString)
-      else df.show(40, truncate = false)
+      df.show(40, truncate = false)
       println(s"[showq] $name rows=${df.count()}")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      GraftSession.release(spark)
     }
     spark.stop()
   }

@@ -16,10 +16,7 @@ class AlsReplaySpec extends AnyFunSuite {
   // PlanHygieneSpec lesson, per CLAUDE.md)
   override def withFixture(test: NoArgTest) =
     try super.withFixture(test)
-    finally {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    finally GraftSession.release(spark)
 
   test("halfSolve matches the closed-form 2x2 ridge solve by hand") {
     // items A=(1.0, 0), B=(0, 1.0) in centi; user rates A:2, B:4

@@ -48,8 +48,7 @@ final class PlanHygieneSpec extends AnyFunSuite {
       // the PPJoin chain) — a leaked InMemoryRelation would change OTHER
       // suites' plans (PlanSpec's flagship one-exchange pin matched the
       // cached sessionFeatures subtree and counted its extra exchange)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.release(spark)
     }
     assert(threw.isEmpty, s"queries failed to plan: ${threw.mkString("; ")}")
     assert(cartesian.isEmpty,

@@ -15,10 +15,7 @@ class PlanSpec extends AnyFunSuite {
   // blocks can't leak into other suites' plans (PlanHygieneSpec lesson)
   override def withFixture(test: NoArgTest) =
     try super.withFixture(test)
-    finally {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    finally GraftSession.release(spark)
 
   /** The guarded scan-parallelism floor (Tables.parScan) inserts ONE hash
     * exchange tagged REPARTITION_BY_NUM directly above a scan whenever the

@@ -12,10 +12,7 @@ class ShapleySpec extends AnyFunSuite {
   // blocks so they can't leak into other suites' plans (CLAUDE.md rule)
   override def withFixture(test: NoArgTest) =
     try super.withFixture(test)
-    finally {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
+    finally GraftSession.release(spark)
 
   // coalitions: {view}×2 (1 converts), {click}×1 (converts), ∅×1
   // (converts), {view,click,signup}×1 (converts) — hand-traceable rates

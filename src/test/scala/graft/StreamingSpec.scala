@@ -127,6 +127,8 @@ class StreamingSpec extends AnyFunSuite {
   test("json escaping handles quotes and control chars") {
     val s = MetricsStore.toJson(Map("k" -> "a\"b\n\tc"))
     assert(s == "{\"k\":\"a\\\"b\\n\\tc\"}")
+    // every other control char too: Verify's oracle_sql.json relies on it
+    assert(MetricsStore.toJson("\\\r\u0001") == "\"\\\\\\r\\u0001\"")
   }
 
   test("sliding window agg on static frame produces expected buckets") {

@@ -12,10 +12,7 @@ class TextRankSpec extends AnyFunSuite {
   // blocks so they can't leak into other suites' plans (CLAUDE.md rule)
   override def withFixture(test: NoArgTest) =
     try super.withFixture(test)
-    finally {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    }
+    finally GraftSession.release(spark)
 
   test("a hub word co-occurring with everything ranks first; stopwords never rank") {
     val docs = Seq(
