@@ -44,6 +44,14 @@ object GraftSession {
     // 100M items / 2^30 bits ≈ a 128 MB filter — still a sane broadcast.
     c.set("spark.sql.optimizer.runtime.bloomFilter.maxNumItems", "100000000")
     c.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "1073741824")
+    // Streaming state: keep one state-store version in the HDFS provider's
+    // in-memory cache, not the default two. StreamJob.processBatch runs its
+    // stateful plan once per trigger, so each trigger commits one version;
+    // with two retained, the ~50k-row session-window state sits in the heap
+    // twice. One covers the success path (Spark's "success case only"
+    // setting); a retried batch reloads its version from the checkpoint's
+    // delta files.
+    c.set("spark.sql.streaming.maxBatchesToRetainInMemory", "1")
     registerFunctions(spark)
     spark
   }

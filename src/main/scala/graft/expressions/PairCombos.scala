@@ -36,10 +36,17 @@ object PairCombos {
 
   val OutType: ArrayType = ArrayType(ElemType, containsNull = false)
 
+  /** Largest initial capacity of the output buffer. The pair count is only
+    * an upper bound (null and equal pairs are skipped), and it passes
+    * `Int.MaxValue` at 46 342 elements; past this cap the buffer grows.
+    */
+  private val MaxCapacityHint = 1 << 16
+
   /** Boxed so codegen can branch on null; called from both eval paths. */
   def combosKernel(a: ArrayData): ArrayData = {
     val n = a.numElements()
-    val out = new java.util.ArrayList[AnyRef](if (n < 2) 0 else n * (n - 1) / 2)
+    val out = new java.util.ArrayList[AnyRef](
+      math.min(n.toLong * (n - 1) / 2, MaxCapacityHint.toLong).toInt)
     var i = 0
     while (i < n) {
       if (!a.isNullAt(i)) {

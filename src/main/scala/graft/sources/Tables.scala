@@ -134,15 +134,22 @@ object Tables {
   // per Verify/Bench run would re-list the file each call; the count is a
   // pure function of (file bytes, session parallelism, split confs), so the
   // key carries the file's length+mtime (r21, ADVICE: a rewrite of the same
-  // path in one JVM must not serve a stale count). Bounded: cleared if it
-  // ever exceeds MaxEntries (a long-lived JVM cycling many data dirs) —
-  // losing the cache only costs a re-probe.
+  // path in one JVM must not serve a stale count); for a directory (a
+  // parquet dataset), the name, length and mtime of every file under it,
+  // since a directory's own length and mtime do not change when a part file
+  // is rewritten in place. Bounded: cleared if it ever exceeds MaxEntries (a
+  // long-lived JVM cycling many data dirs) — losing the cache only costs a
+  // re-probe.
   private val MaxEntries = 1024
   private val scanPartsCache =
     new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private def stamp(f: java.io.File): String =
+    if (f.isDirectory)
+      Option(f.listFiles).getOrElse(Array.empty[java.io.File]).sortBy(_.getName)
+        .map(c => s"${c.getName}:${stamp(c)}").mkString("[", ",", "]")
+    else s"${f.length}@${f.lastModified}"
   private[graft] def scanParts(key: String, path: String, df: DataFrame): Int = {
-    val f = new java.io.File(path)
-    val full = s"$key#${f.length}@${f.lastModified}"
+    val full = s"$key#${stamp(new java.io.File(path))}"
     if (scanPartsCache.size > MaxEntries) scanPartsCache.clear()
     scanPartsCache.computeIfAbsent(full, _ => df.rdd.getNumPartitions).intValue
   }

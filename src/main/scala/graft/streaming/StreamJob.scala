@@ -19,9 +19,13 @@ import graft.ml.OnlineLogreg
   * design (stream_processor.py:226 collects the whole micro-batch): the
   * model state lives on the driver, so we collect at most `maxScoredRows`
   * rows per trigger (update-mode emits only changed windows — bounded by
-  * active sessions per slide, not by history). Feedback rule: purchase>0 →
-  * label 1; no purchase but cart>0 → label 0; view-only windows are skipped
-  * as negatives (stream_processor.py:272-278).
+  * active sessions per slide, not by history). Like the reference, each
+  * micro-batch is read once: one Spark job yields the totals and the
+  * scored rows, so the window state commits one version per trigger and
+  * the session keeps one version in memory (see [[processBatch]]).
+  * Feedback rule: purchase>0 → label 1; no purchase but cart>0 → label 0;
+  * view-only windows are skipped as negatives
+  * (stream_processor.py:272-278).
   */
 object StreamJob {
 
@@ -92,7 +96,21 @@ object StreamJob {
       slideDuration = conf.slideDuration
     )
 
-  /** T6: per-micro-batch scoring + online learning + metrics write. */
+  /** T6: per-micro-batch scoring + online learning + metrics write.
+    *
+    * One pass, one Spark job per micro-batch. Every action on a
+    * `foreachBatch` frame re-runs the watermarked window aggregate behind it
+    * and re-commits its state store, so the totals and the scored rows come
+    * out of a single `mapPartitions`: per partition the sums of the four
+    * counts, the row count and the partition's first `maxScoredRows` rows.
+    * The driver merges the sums (`Math.addExact`: a `Long` overflow throws,
+    * as the ANSI `sum` does) and keeps the first `maxScoredRows` rows in
+    * partition order, the rows `limit(maxScoredRows)` would take. An empty
+    * batch (row count 0) writes no metrics. With one commit per trigger,
+    * one retained state version covers the success path, which
+    * [[graft.GraftSession.tune]] sets (the default two would hold the
+    * window state in the heap twice).
+    */
   def processBatch(
       batch: DataFrame,
       batchId: Long,
@@ -100,27 +118,37 @@ object StreamJob {
       store: MetricsSink,
       maxScoredRows: Int = 1000
   ): Unit = {
-    if (batch.isEmpty) return
-    // Spark-side totals (A7) — no driver collect for the aggregate part.
-    val totals = batch
-      .agg(
-        sum("view_count").as("total_views"),
-        sum("cart_count").as("total_carts"),
-        sum("purchase_count").as("total_purchases"),
-        sum("total_events").as("total_events"),
-        count(lit(1)).as("active_sessions")
-      )
-      .collect()(0)
-    def l(i: Int): Long = if (totals.isNullAt(i)) 0L else totals.getLong(i)
-    val carts = l(1)
-    val purchases = l(2)
-    val conversion = if (carts == 0) 0.0 else purchases.toDouble / carts * 100.0
-
-    val rows: Array[Row] = batch
-      .select("user_session", "view_count", "cart_count", "purchase_count",
-        "session_duration", "avg_price", "max_price", "unique_items")
-      .limit(maxScoredRows)
+    def long(c: String) = col(c).cast("long")
+    // columns 0-7 are the scored row, 8 is total_events; sums holds views,
+    // carts, purchases, total_events, then the row count
+    val summed = Array(1, 2, 3, 8)
+    val parts = batch
+      .select(col("user_session"), long("view_count"), long("cart_count"),
+        long("purchase_count"), col("session_duration"), col("avg_price"),
+        col("max_price"), col("unique_items"), long("total_events"))
+      .rdd
+      .mapPartitions { it =>
+        val sums = new Array[Long](5)
+        val kept = Array.newBuilder[Row]
+        var n = 0
+        it.foreach { r =>
+          for (k <- summed.indices if !r.isNullAt(summed(k)))
+            sums(k) = Math.addExact(sums(k), r.getLong(summed(k)))
+          sums(4) += 1
+          if (n < maxScoredRows) { kept += r; n += 1 }
+        }
+        Iterator.single((sums, kept.result()))
+      }
       .collect()
+    val totals = parts.foldLeft(new Array[Long](5)) { case (acc, (s, _)) =>
+      acc.indices.foreach(k => acc(k) = Math.addExact(acc(k), s(k)))
+      acc
+    }
+    if (totals(4) == 0) return
+    val carts = totals(1)
+    val purchases = totals(2)
+    val conversion = if (carts == 0) 0.0 else purchases.toDouble / carts * 100.0
+    val rows: Array[Row] = parts.iterator.flatMap(_._2).take(maxScoredRows).toArray
 
     val predictions = rows.map { r =>
       def d(i: Int): Double = if (r.isNullAt(i)) 0.0 else r.get(i) match {
@@ -149,11 +177,11 @@ object StreamJob {
       Map(
         "batch_id" -> batchId,
         "batch_count" -> rows.length,
-        "total_views" -> l(0),
+        "total_views" -> totals(0),
         "total_carts" -> carts,
         "total_purchases" -> purchases,
-        "total_events" -> l(3),
-        "active_sessions" -> l(4),
+        "total_events" -> totals(3),
+        "active_sessions" -> totals(4),
         "conversion_rate" -> conversion,
         "timestamp" -> Instant.now().toString,
         "predictions" -> predictions.take(50).toSeq,

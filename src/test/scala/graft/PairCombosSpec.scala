@@ -50,4 +50,16 @@ class PairCombosSpec extends AnyFunSuite {
     val df = Seq((1L, Seq(9L, 2L, 5L))).toDF("id", "docs")
     assert(viaKernel(df).toSet == Set((2L, 9L), (5L, 9L), (2L, 5L)))
   }
+
+  test("a list of 46 342 elements, whose pair count passes Int.MaxValue, still evaluates") {
+    val n = 46342
+    val docs: Seq[Option[Long]] = Seq.tabulate(n) {
+      case 0                  => Some(1L)
+      case i if i == n / 2    => Some(2L)
+      case i if i == n - 1    => Some(3L)
+      case _                  => None
+    }
+    val df = Seq((1L, docs)).toDF("id", "docs")
+    assert(viaKernel(df).toSet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
+  }
 }

@@ -359,16 +359,35 @@ class StreamingSpec extends AnyFunSuite {
       windowDuration = "1 minute", slideDuration = "30 seconds")
     val model = new OnlineLogreg(nFeatures = 6)
     val store = new MetricsStore(metricsPath)
+    // active_sessions per batch id, as processBatch reported it
+    val reported = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
     val q = StreamJob.sessionAggStream(events, conf).writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        StreamJob.processBatch(b, id, model, store)
+        StreamJob.processBatch(b, id, model, new graft.streaming.MetricsSink {
+          def update(current: Map[String, Any]): Unit = {
+            reported.put(id, current("active_sessions").asInstanceOf[Long])
+            store.update(current)
+          }
+          def latest: Option[Map[String, Any]] = store.latest
+          def size: Int = store.size
+        })
       }
       .start()
     try {
       q.processAllAvailable()
     } finally q.stop()
+
+    // the state store commits once per trigger: each data batch's updated
+    // state rows are the rows processBatch read, counted once
+    val dataBatches = q.recentProgress.filter(p => reported.containsKey(p.batchId))
+    assert(dataBatches.nonEmpty)
+    dataBatches.foreach { p =>
+      assert(p.stateOperators.head.numRowsUpdated == reported.get(p.batchId),
+        s"batch ${p.batchId}: state rows updated vs active_sessions")
+    }
+    assert(spark.conf.get("spark.sql.streaming.maxBatchesToRetainInMemory") == "1")
 
     assert(Files.exists(Paths.get(metricsPath)), "metrics file written")
     val txt = new String(Files.readAllBytes(Paths.get(metricsPath)))

@@ -84,4 +84,40 @@ class TablesSpec extends AnyFunSuite {
     assert(bad === 0L, s"$bad rows with ts_ns inconsistent with ts")
     assert(ev.count() > 0L)
   }
+
+  test("scanParts re-reads a parquet directory's partition count after a part file is rewritten in place") {
+    def partFile(dir: String): java.nio.file.Path = {
+      val ps = Files.list(java.nio.file.Paths.get(dir))
+      try ps.filter(_.getFileName.toString.startsWith("part-")).findFirst().get()
+      finally ps.close()
+    }
+    def write(rows: Int): String = {
+      val dir = Files.createTempDirectory("tables_scanparts").toString + "/t.parquet"
+      spark.range(rows).selectExpr("id", "hash(id) AS h").coalesce(1).write.parquet(dir)
+      dir
+    }
+    val small = write(2000)
+    val large = write(20000)
+    val key = s"$small@scanparts-spec"
+    def probe(): (Int, Int) = {
+      val df = spark.read.parquet(small)
+      (Tables.scanParts(key, small, df), df.rdd.getNumPartitions)
+    }
+    val conf = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(conf)
+    // small splits, so the partition count follows the part file's size
+    spark.conf.set(conf, "4096")
+    try {
+      val (before, fresh0) = probe()
+      assert(before == fresh0)
+      // same file names, new bytes: the directory's own length and mtime
+      // stay as they were
+      Files.write(partFile(small), Files.readAllBytes(partFile(large)))
+      val crc = (d: String) => partFile(d).resolveSibling(s".${partFile(d).getFileName}.crc")
+      Files.write(crc(small), Files.readAllBytes(crc(large)))
+      val (after, fresh1) = probe()
+      assert(fresh1 > fresh0)
+      assert(after == fresh1, s"stale partition count $after, the rewritten directory plans $fresh1")
+    } finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
 }
