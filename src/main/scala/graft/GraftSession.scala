@@ -52,6 +52,28 @@ object GraftSession {
     // setting); a retried batch reloads its version from the checkpoint's
     // delta files.
     c.set("spark.sql.streaming.maxBatchesToRetainInMemory", "1")
+    // Streaming checkpoint files (offset and commit logs, state-store
+    // deltas and Spark's checksum files for them) are each written to a
+    // temp file and renamed into place. On a local file system without
+    // Hadoop's native library, Spark's default manager forks a `chmod` per
+    // file or directory it creates and a `readlink` per rename: about a
+    // hundred forks per trigger. LocalCheckpointFileManager does the same
+    // work in-process and keeps Hadoop's `.crc` sidecar (and verifies it on
+    // read). On a cluster's HDFS or S3 checkpoint it is Spark's default
+    // manager, unchanged. Spark's own checkpoint checksums
+    // (spark.sql.streaming.checkpoint.fileChecksum.enabled) stay on.
+    c.set("spark.sql.streaming.checkpointFileManagerClass",
+      classOf[graft.streaming.LocalCheckpointFileManager].getName)
+    // A scan over more paths than parallelPartitionDiscovery.threshold (32,
+    // unchanged) lists them in a Spark job with one task per path by
+    // default, so a streaming trigger that picks up 50 new files paid 50
+    // task launches to list them. Capped at one task per core, the job
+    // lists the same paths in fewer, larger tasks. It does not make
+    // listing driver-local on a cluster: the job still runs on the
+    // executors, with defaultParallelism (their total cores when the
+    // session is tuned, or spark.default.parallelism) tasks.
+    c.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+      spark.sparkContext.defaultParallelism.toString)
     registerFunctions(spark)
     spark
   }

@@ -56,7 +56,8 @@ object BradleyTerry {
 
   /** MM fixed point over the collected win matrix — exact Long
     * arithmetic, identical to the oracle's CTE unrolling. Returns
-    * (source, games, wins, strength_micros) sorted by source.
+    * (source, games, wins, strength_micros) sorted by source; no games
+    * (no cross-source contest) gives the empty frame, as the oracle does.
     */
   def fit(spark: SparkSession, docs: DataFrame, iters: Int = 5): DataFrame = {
     import spark.implicits._
@@ -76,7 +77,8 @@ object BradleyTerry {
     // both directions of the pair list: (item, opponent, n_games)
     val bi = mat.flatMap { case (i, j, n, _) => Seq((i, j, n), (j, i, n)) }
     var p: Map[String, Long] = items.map(_ -> 1000000L).toMap
-    for (_ <- 1 to iters) {
+    // k = 0 (no contests): nothing to fit, and the rescale would divide by 0
+    for (_ <- 1 to iters if k > 0) {
       val den = items.map { s =>
         s -> bi.collect { case (`s`, o, n) => n * Scale / (p(s) + p(o)) }.sum
       }.toMap

@@ -76,22 +76,55 @@ private[graft] object QueryHelpers {
     * branch's per-round scheduling gaps are back-filled by another's tasks
     * instead of serializing 4 train loops end to end. Deterministic by
     * construction — every builder returns the same frame it returned when
-    * called sequentially; only the job scheduling overlaps. The active
-    * session is pinned per thread (operators take the session explicitly,
-    * but Spark's thread-inheritance of the active session is
-    * creation-time-only and pool threads may predate it).
+    * called sequentially; only the job scheduling overlaps.
+    *
+    * The pool is this call's own, one thread per builder, and is gone when
+    * the call returns. Each pool thread pins `s` as its active session
+    * (Spark's thread-inheritance of the active session is creation-time
+    * only) and restores what it had before. The builders' jobs carry one
+    * job tag: if a builder fails or `timeout` passes, the others' jobs are
+    * cancelled rather than left running detached.
     */
   private[graft] def buildConcurrently(
-      s: SparkSession, builders: Seq[() => DataFrame]): Seq[DataFrame] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(
-      Future.sequence(builders.map(b => Future {
-        org.apache.spark.sql.SparkSession.setActiveSession(s)
-        b()
-      })),
-      Duration(20, scala.concurrent.duration.MINUTES))
+      s: SparkSession, builders: Seq[() => DataFrame],
+      timeout: scala.concurrent.duration.FiniteDuration =
+        scala.concurrent.duration.Duration(20, "minutes")): Seq[DataFrame] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+    val sc = s.sparkContext
+    val tag = s"graft-build-${java.util.UUID.randomUUID}"
+    val threads = new java.util.concurrent.atomic.AtomicInteger
+    val pool = Executors.newFixedThreadPool(builders.size max 1, (r: Runnable) => {
+      val t = new Thread(r, s"$tag-${threads.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val pending = builders.map(b => pool.submit(new Callable[DataFrame] {
+        def call(): DataFrame = {
+          val prev = SparkSession.getActiveSession
+          SparkSession.setActiveSession(s)
+          sc.addJobTag(tag)
+          sc.setInterruptOnCancel(true)
+          try b()
+          finally {
+            sc.removeJobTag(tag)
+            prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+          }
+        }
+      }))
+      val deadline = System.nanoTime() + timeout.toNanos
+      pending.map { f =>
+        try f.get(deadline - System.nanoTime(), TimeUnit.NANOSECONDS)
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+    } catch {
+      case e: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        throw e
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
   }
 
   /** Gap-session bounds shared by the interval-overlap queries: one row per

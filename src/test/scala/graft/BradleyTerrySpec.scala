@@ -54,6 +54,15 @@ final class BradleyTerrySpec extends AnyFunSuite {
     assert(got("A") > got("B"))
   }
 
+  test("empty docs, or no cross-source contest, fit to the empty frame") {
+    val cols = Seq("source", "games", "wins", "strength_micros")
+    for (d <- Seq(docs(), docs((0L, "A", 10L), (1L, "A", 5L)))) {
+      val got = BradleyTerry.fit(spark, d)
+      assert(got.columns.toSeq === cols)
+      assert(got.collect().isEmpty)
+    }
+  }
+
   test("fit is deterministic across invocations") {
     val d = docs(
       (0L, "A", 10L), (1L, "B", 5L),

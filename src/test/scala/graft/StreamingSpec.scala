@@ -435,83 +435,9 @@ class StreamingSpec extends AnyFunSuite {
     // by emission-sequence parity with an uninterrupted run that saw both
     // files at one-file-per-trigger: if state were lost, s1's windows would
     // re-emit with view=0/cart=0 after restart and the totals would differ.
-    import graft.streaming.MetricsSink
-    class RecordingSink extends MetricsSink {
-      val updates = scala.collection.mutable.ArrayBuffer[Map[String, Any]]()
-      def update(current: Map[String, Any]): Unit = synchronized { updates += current }
-      def latest: Option[Map[String, Any]] = synchronized { updates.lastOption }
-      def size: Int = synchronized { updates.size }
-      // deterministic Spark-side fields only: timestamp is wall-clock and
-      // predictions depend on the driver-side model instance (S9 model
-      // persistence is its own surface, tested in OnlineLogreg's spec)
-      // batch_id is excluded from the parity compare: a stopping query may
-      // commit a trailing NO-DATA batch (watermark bookkeeping) that
-      // processBatch skips as empty, so the restarted data batch's id can
-      // be continuous+1 vs the uninterrupted twin. Continuity is asserted
-      // separately below.
-      private val DetKeys = Set("batch_count", "total_views",
-        "total_carts", "total_purchases", "total_events", "active_sessions",
-        "conversion_rate")
-      def det: Seq[Map[String, Any]] =
-        synchronized { updates.toSeq.map(_.filter(kv => DetKeys(kv._1))) }
-      def batchIds: Seq[Long] =
-        synchronized { updates.toSeq.map(_("batch_id").asInstanceOf[Long]) }
-    }
-    def evt(t: String, typ: String, sess: String, price: Double) =
-      s"""{"event_time":"$t UTC","event_type":"$typ","product_id":1,"category_id":1,""" +
-        s""""category_code":"c","brand":"b","price":$price,"user_id":1,""" +
-        s""""user_session":"$sess","ingestion_time":"$t"}"""
-    // batch 1's purchase lands in the SAME windows batch 0's s1 events
-    // opened — the state-recovery probe; s2 opens fresh windows
-    val b0 = Seq(
-      evt("2024-01-01 10:00:05", "view", "s1", 10.0),
-      evt("2024-01-01 10:00:15", "cart", "s1", 20.0))
-    val b1 = Seq(
-      evt("2024-01-01 10:00:25", "purchase", "s1", 20.0),
-      evt("2024-01-01 10:05:35", "view", "s2", 5.0))
-
-    def runJob(dir: String, cp: String, sink: RecordingSink): Unit = {
-      val raw = spark.readStream.format("text")
-        .option("maxFilesPerTrigger", "1").load(dir)
-        .select($"value".as("json_str"))
-      val events = StreamJob.parse(raw)
-      val conf = StreamJob.Config(
-        checkpointDir = cp, windowDuration = "1 minute", slideDuration = "30 seconds")
-      val model = new OnlineLogreg(nFeatures = 6)
-      val q = StreamJob.sessionAggStream(events, conf).writeStream
-        .outputMode("update")
-        .option("checkpointLocation", cp)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          StreamJob.processBatch(b, id, model, sink)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    def write(dir: String, name: String, lines: Seq[String], mtime: Long): Unit = {
-      val p = Paths.get(dir, name)
-      Files.write(p, lines.mkString("\n").getBytes)
-      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(mtime))
-    }
-
-    // interrupted path: batch 0 → STOP → add batch 1 → restart, same checkpoint
-    val dirA = Files.createTempDirectory("graft-restart-in").toString
-    val cpA = Files.createTempDirectory("graft-restart-cp").toString
-    val sinkA = new RecordingSink
-    write(dirA, "b0.txt", b0, 1000000L)
-    runJob(dirA, cpA, sinkA)
-    val afterFirst = sinkA.size
+    val (sinkA, afterFirst) = StreamRestart.interrupted(spark, spark)
     assert(afterFirst == 1, s"batch 0 should emit exactly once, got $afterFirst")
-    write(dirA, "b1.txt", b1, 2000000L)
-    runJob(dirA, cpA, sinkA) // a NEW query resumed from cpA
-
-    // uninterrupted twin: both files present from the start, fresh checkpoint
-    val dirB = Files.createTempDirectory("graft-restart-twin-in").toString
-    val cpB = Files.createTempDirectory("graft-restart-twin-cp").toString
-    val sinkB = new RecordingSink
-    write(dirB, "b0.txt", b0, 1000000L)
-    write(dirB, "b1.txt", b1, 2000000L)
-    runJob(dirB, cpB, sinkB)
+    val sinkB = StreamRestart.continuous(spark)
 
     // (a)+(b)+(c): identical emission sequences — batch ids continue (0 then
     // 1), batch 0 is not replayed, and the restarted batch-1 emission shows
@@ -525,10 +451,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(ids.head == 0L && ids.last > ids.head,
       s"batch ids must continue from the checkpoint, got $ids")
     val last = sinkA.det.last
-    // cumulative proof: s1's two windows carry batch-0's view+cart across the
-    // restart (2 views from s1 state + 2 from s2's new windows)
-    assert(last("total_views") == 4L && last("total_carts") == 2L &&
-      last("total_purchases") == 2L, s"window state not recovered: $last")
+    assert(StreamRestart.FinalTotals.forall { case (k, v) => last(k) == v },
+      s"window state not recovered: $last")
   }
 
   test("stateless curation ops (PiiScrub, HashSplit, Repetition) compose on a stream") {
