@@ -67,13 +67,16 @@ object GraftSession {
     // A scan over more paths than parallelPartitionDiscovery.threshold (32,
     // unchanged) lists them in a Spark job with one task per path by
     // default, so a streaming trigger that picks up 50 new files paid 50
-    // task launches to list them. Capped at one task per core, the job
-    // lists the same paths in fewer, larger tasks. It does not make
-    // listing driver-local on a cluster: the job still runs on the
-    // executors, with defaultParallelism (their total cores when the
-    // session is tuned, or spark.default.parallelism) tasks.
-    c.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
-      spark.sparkContext.defaultParallelism.toString)
+    // task launches to list them. In local mode the job is capped at one
+    // task per core (local[n]'s fixed defaultParallelism), so it lists the
+    // same paths in fewer, larger tasks. On a cluster Spark's default cap
+    // (10 000) stays: there defaultParallelism counts the executors
+    // registered when tune runs, which can be 2 before any has registered
+    // or under dynamic allocation, and would pin every later listing job,
+    // batch scans included, at that many tasks.
+    if (spark.sparkContext.isLocal)
+      c.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        spark.sparkContext.defaultParallelism.toString)
     registerFunctions(spark)
     spark
   }

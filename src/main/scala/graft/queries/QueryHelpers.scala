@@ -81,15 +81,15 @@ private[graft] object QueryHelpers {
     * The pool is this call's own, one thread per builder, and is gone when
     * the call returns. Each pool thread pins `s` as its active session
     * (Spark's thread-inheritance of the active session is creation-time
-    * only) and restores what it had before. The builders' jobs carry one
-    * job tag: if a builder fails or `timeout` passes, the others' jobs are
-    * cancelled rather than left running detached.
+    * only) and restores what it had before. Results are collected as the
+    * builders finish and returned in `builders` order. The builders' jobs
+    * carry one job tag: on the first builder failure, or when 20 minutes
+    * pass, the others' jobs are cancelled rather than left running
+    * detached.
     */
   private[graft] def buildConcurrently(
-      s: SparkSession, builders: Seq[() => DataFrame],
-      timeout: scala.concurrent.duration.FiniteDuration =
-        scala.concurrent.duration.Duration(20, "minutes")): Seq[DataFrame] = {
-    import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+      s: SparkSession, builders: Seq[() => DataFrame]): Seq[DataFrame] = {
+    import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, TimeUnit, TimeoutException}
     val sc = s.sparkContext
     val tag = s"graft-build-${java.util.UUID.randomUUID}"
     val threads = new java.util.concurrent.atomic.AtomicInteger
@@ -99,24 +99,29 @@ private[graft] object QueryHelpers {
       t
     })
     try {
-      val pending = builders.map(b => pool.submit(new Callable[DataFrame] {
-        def call(): DataFrame = {
+      val done = new ExecutorCompletionService[(Int, DataFrame)](pool)
+      builders.zipWithIndex.foreach { case (b, i) => done.submit(new Callable[(Int, DataFrame)] {
+        def call(): (Int, DataFrame) = {
           val prev = SparkSession.getActiveSession
           SparkSession.setActiveSession(s)
           sc.addJobTag(tag)
           sc.setInterruptOnCancel(true)
-          try b()
+          try i -> b()
           finally {
             sc.removeJobTag(tag)
             prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
           }
         }
-      }))
-      val deadline = System.nanoTime() + timeout.toNanos
-      pending.map { f =>
-        try f.get(deadline - System.nanoTime(), TimeUnit.NANOSECONDS)
-        catch { case e: ExecutionException => throw e.getCause }
+      })}
+      val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(20)
+      val out = new Array[DataFrame](builders.size)
+      builders.foreach { _ =>
+        val f = done.poll(deadline - System.nanoTime(), TimeUnit.NANOSECONDS)
+        if (f == null) throw new TimeoutException("builders still running after 20 minutes")
+        val (i, df) = try f.get() catch { case e: ExecutionException => throw e.getCause }
+        out(i) = df
       }
+      out.toSeq
     } catch {
       case e: Throwable =>
         sc.cancelJobsWithTag(tag)

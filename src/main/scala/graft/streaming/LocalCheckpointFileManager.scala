@@ -55,18 +55,23 @@ class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
 
   /** `rename(2)`: atomic replace when `overwriteIfPossible`, else
     * `FileAlreadyExistsException` when the target exists. The `.crc`
-    * follows its file.
+    * follows its file. On replace the target's old `.crc` goes first, so a
+    * crash between the moves leaves the old or the new file with no `.crc`
+    * (read unchecked), never new bytes under the old `.crc`, which would
+    * fail every later read.
     */
   override def renameTempFile(srcPath: Path, dstPath: Path, overwriteIfPossible: Boolean): Unit =
     if (!local) super.renameTempFile(srcPath, dstPath, overwriteIfPossible)
     else {
-      if (overwriteIfPossible) Files.move(file(srcPath), file(dstPath), StandardCopyOption.ATOMIC_MOVE)
-      else try Files.move(file(srcPath), file(dstPath)) catch {
+      val dstCrc = file(localFs.getChecksumFile(dstPath))
+      if (overwriteIfPossible) {
+        Files.deleteIfExists(dstCrc)
+        Files.move(file(srcPath), file(dstPath), StandardCopyOption.ATOMIC_MOVE)
+      } else try Files.move(file(srcPath), file(dstPath)) catch {
         case _: java.nio.file.FileAlreadyExistsException =>
           throw new FileAlreadyExistsException(s"$dstPath already exists")
       }
       val crc = file(localFs.getChecksumFile(srcPath))
-      val dstCrc = file(localFs.getChecksumFile(dstPath))
       if (Files.exists(crc)) Files.move(crc, dstCrc, StandardCopyOption.ATOMIC_MOVE)
       else Files.deleteIfExists(dstCrc)
     }

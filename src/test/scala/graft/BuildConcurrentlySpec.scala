@@ -1,12 +1,12 @@
 package graft
 
-import java.util.concurrent.TimeoutException
+import java.util.concurrent.TimeUnit
 
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graftbridge.ListenerBus
-import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd}
+import org.apache.spark.scheduler.{JobFailed, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +14,8 @@ import graft.queries.QueryHelpers
 
 /** `QueryHelpers.buildConcurrently`: builders run with the given session
   * active, the caller's active session is untouched, no pool thread
-  * outlives the call, and a timeout cancels the builders' running jobs.
+  * outlives the call, and the first builder failure cancels the others'
+  * running jobs.
   */
 final class BuildConcurrentlySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -54,24 +55,37 @@ final class BuildConcurrentlySpec extends AnyFunSuite {
     noPoolThreadAlive()
   }
 
-  test("on timeout the builders' job is cancelled, not left running") {
+  test("a failing builder listed after a long-running one cancels its job promptly") {
     val sc = spark.sparkContext
+    val desc = "BuildConcurrentlySpec long job"
+    val longJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val started = new java.util.concurrent.CountDownLatch(1)
     val failed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == desc)) {
+          longJob.set(e.jobId)
+          started.countDown()
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobResult.isInstanceOf[JobFailed]) failed.countDown()
+        if (e.jobId == longJob.get && e.jobResult.isInstanceOf[JobFailed]) failed.countDown()
     }
     sc.addSparkListener(listener)
     try {
       val t0 = System.nanoTime()
-      intercept[TimeoutException](QueryHelpers.buildConcurrently(spark, Seq(builder {
-        spark.range(1).repartition(1).mapPartitions { it =>
-          Thread.sleep(60000); it
-        }(org.apache.spark.sql.Encoders.LONG).count()
-        spark.range(1).toDF()
-      }), timeout = 1.second))
+      val e = intercept[IllegalStateException](QueryHelpers.buildConcurrently(spark, Seq(
+        builder {
+          sc.setJobDescription(desc)
+          sc.parallelize(Seq(1), 1).map { x => Thread.sleep(60000); x }.count()
+          spark.range(1).toDF()
+        },
+        builder {
+          assert(started.await(30, TimeUnit.SECONDS), "the long job never started")
+          throw new IllegalStateException("boom")
+        })))
+      assert(e.getMessage == "boom")
       ListenerBus.drain(sc)
-      assert(failed.await(30, java.util.concurrent.TimeUnit.SECONDS), "job still running")
+      assert(failed.await(30, TimeUnit.SECONDS), "job still running")
       assert((System.nanoTime() - t0).nanos < 40.seconds)
       noPoolThreadAlive()
     } finally sc.removeSparkListener(listener)

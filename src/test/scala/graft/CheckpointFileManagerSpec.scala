@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, StandardCopyOption, Path => JPath}
 
 import scala.jdk.CollectionConverters._
 
@@ -15,7 +15,8 @@ import graft.streaming.LocalCheckpointFileManager
 
 /** The checkpoint file manager `GraftSession.tune` names: Spark's
   * atomic-write contract (whole file or nothing, overwrite only when
-  * asked, cancel leaves nothing), Hadoop's `.crc` check on read, resume
+  * asked, cancel leaves nothing), Hadoop's `.crc` check on read, an
+  * overwrite that never leaves new bytes under an old `.crc`, resume
   * from a checkpoint Spark's default manager wrote, and no `readlink` or
   * `chmod` subprocess per checkpoint file.
   */
@@ -77,6 +78,23 @@ final class CheckpointFileManagerSpec extends AnyFunSuite {
     assert(read(fm, p) == "first")
     write(fm, p, "third, longer")
     assert(read(fm, p) == "third, longer")
+  }
+
+  test("an overwrite interrupted between its two moves leaves a readable file") {
+    val dir = Files.createTempDirectory("graft-cfm")
+    val fm = manager(spark, dir)
+    val p = new Path(dir.resolve("4.delta").toUri)
+    val (target, temp) = (dir.resolve("4.delta"), dir.resolve("temp"))
+    write(fm, p, "old state")
+    write(fm, new Path(temp.toUri), "new state")
+    // new bytes under the target's old .crc would fail every later read
+    Files.copy(temp, target, StandardCopyOption.REPLACE_EXISTING)
+    intercept[ChecksumException](read(fm, p))
+    // renameTempFile's first two steps: the old .crc goes, the data file moves
+    write(fm, p, "old state")
+    Files.delete(dir.resolve(".4.delta.crc"))
+    Files.move(temp, target, StandardCopyOption.ATOMIC_MOVE)
+    assert(read(fm, p) == "new state")
   }
 
   test("cancel() leaves neither the temp file nor the target") {
