@@ -47,10 +47,10 @@ object GraftSession {
     // Streaming state: keep one state-store version in the HDFS provider's
     // in-memory cache, not the default two. StreamJob.processBatch runs its
     // stateful plan once per trigger, so each trigger commits one version;
-    // with two retained, the ~50k-row session-window state sits in the heap
-    // twice. One covers the success path (Spark's "success case only"
-    // setting); a retried batch reloads its version from the checkpoint's
-    // delta files.
+    // with two retained, the session state (one row per active session,
+    // streaming.SessionPanes) sits in the heap twice. One covers the
+    // success path (Spark's "success case only" setting); a retried batch
+    // reloads its version from the checkpoint's delta files.
     c.set("spark.sql.streaming.maxBatchesToRetainInMemory", "1")
     // Streaming checkpoint files (offset and commit logs, state-store
     // deltas and Spark's checksum files for them) are each written to a

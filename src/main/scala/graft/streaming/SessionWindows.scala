@@ -5,15 +5,17 @@ import org.apache.spark.sql.functions._
 
 /** T2: the sliding-window session aggregate
   * (reference: src/streaming/stream_processor.py:170-201). Pure
-  * `DataFrame => DataFrame` so the identical code runs on a static frame
-  * (oracle-testable window bucketing) and on a stream (after
-  * `withWatermark`).
+  * `DataFrame => DataFrame` on a static frame (oracle-testable window
+  * bucketing). The stream computes the same rows with [[SessionPanes]], one
+  * state row per session; this aggregate is its static twin (and still
+  * runs on a stream after `withWatermark`, one state row per window).
   */
 object SessionWindows {
 
   /** Per-(session, sliding window) features. `exactDistinct = false` swaps
-    * `countDistinct` for HLL `approx_count_distinct` — exact distinct is
-    * unsupported in streaming aggregation and needlessly expensive at scale.
+    * `countDistinct` for HLL `approx_count_distinct`: exact distinct is
+    * unsupported in a streaming aggregation and costly at scale. The
+    * stream's [[SessionPanes]] counts exactly, `exactDistinct = true`.
     */
   def slidingSessionAgg(
       df: DataFrame,

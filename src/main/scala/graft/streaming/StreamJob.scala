@@ -12,8 +12,12 @@ import graft.ml.OnlineLogreg
 /** T1–T6: the streaming topology
   * (reference: src/streaming/stream_processor.py:305-347).
   *
-  *   source → parse → watermark(10m) → slidingSessionAgg(5m/30s)
+  *   source → parse → watermark(10m) → SessionPanes(5m/30s)
   *          → foreachBatch { score + online-fit + metrics JSON }
+  *
+  * The sliding-window features come from one state row per session, its
+  * 30 s panes ([[SessionPanes]]), with `unique_items` exact as in the
+  * reference; `SessionWindows.slidingSessionAgg` is the static twin.
   *
   * The per-batch scoring mirrors the reference's deliberate driver-side
   * design (stream_processor.py:226 collects the whole micro-batch): the
@@ -21,8 +25,8 @@ import graft.ml.OnlineLogreg
   * rows per trigger (update-mode emits only changed windows — bounded by
   * active sessions per slide, not by history). Like the reference, each
   * micro-batch is read once: one Spark job yields the totals and the
-  * scored rows, so the window state commits one version per trigger and
-  * the session keeps one version in memory (see [[processBatch]]).
+  * scored rows, so the state store commits one version per trigger and
+  * the Spark session keeps one version in memory (see [[processBatch]]).
   * Feedback rule: purchase>0 → label 1; no purchase but cart>0 → label 0;
   * view-only windows are skipped as negatives
   * (stream_processor.py:272-278).
@@ -86,20 +90,18 @@ object StreamJob {
       .withColumn("event_timestamp", try_to_timestamp(col("event_time"), lit("yyyy-MM-dd HH:mm:ss 'UTC'")))
       .filter(col("event_timestamp").isNotNull)
 
-  /** T1+T2: watermark then sliding session aggregation. */
+  /** T1+T2: watermark then sliding session aggregation from one state row
+    * per session ([[SessionPanes]]): the columns of
+    * `SessionWindows.slidingSessionAgg`, `unique_items` exact.
+    */
   def sessionAggStream(events: DataFrame, conf: Config): DataFrame =
-    SessionWindows.slidingSessionAgg(
-      events.withWatermark("event_timestamp", conf.watermarkDelay),
-      sessionCol = "user_session",
-      tsCol = "event_timestamp",
-      windowDuration = conf.windowDuration,
-      slideDuration = conf.slideDuration
-    )
+    SessionPanes.slidingSessionAgg(events, conf.watermarkDelay, conf.windowDuration,
+      conf.slideDuration)
 
   /** T6: per-micro-batch scoring + online learning + metrics write.
     *
     * One pass, one Spark job per micro-batch. Every action on a
-    * `foreachBatch` frame re-runs the watermarked window aggregate behind it
+    * `foreachBatch` frame re-runs the stateful session operator behind it
     * and re-commits its state store, so the totals and the scored rows come
     * out of a single `mapPartitions`: per partition the sums of the four
     * counts, the row count and the partition's first `maxScoredRows` rows.
@@ -109,7 +111,7 @@ object StreamJob {
     * batch (row count 0) writes no metrics. With one commit per trigger,
     * one retained state version covers the success path, which
     * [[graft.GraftSession.tune]] sets (the default two would hold the
-    * window state in the heap twice).
+    * session state in the heap twice).
     */
   def processBatch(
       batch: DataFrame,

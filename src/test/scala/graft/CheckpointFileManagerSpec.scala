@@ -15,10 +15,10 @@ import graft.streaming.LocalCheckpointFileManager
 
 /** The checkpoint file manager `GraftSession.tune` names: Spark's
   * atomic-write contract (whole file or nothing, overwrite only when
-  * asked, cancel leaves nothing), Hadoop's `.crc` check on read, an
-  * overwrite that never leaves new bytes under an old `.crc`, resume
-  * from a checkpoint Spark's default manager wrote, and no `readlink` or
-  * `chmod` subprocess per checkpoint file.
+  * asked, cancel and a refused publish leave nothing), Hadoop's `.crc`
+  * check on read, an overwrite that never leaves new bytes under an old
+  * `.crc`, resume from a checkpoint Spark's default manager wrote, and no
+  * `readlink` or `chmod` subprocess per checkpoint file.
   */
 final class CheckpointFileManagerSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -78,6 +78,16 @@ final class CheckpointFileManagerSpec extends AnyFunSuite {
     assert(read(fm, p) == "first")
     write(fm, p, "third, longer")
     assert(read(fm, p) == "third, longer")
+  }
+
+  test("a refused publish deletes its temp file and .crc") {
+    val dir = Files.createTempDirectory("graft-cfm")
+    val fm = manager(spark, dir)
+    val p = new Path(dir.resolve("1").toUri)
+    write(fm, p, "first")
+    intercept[FileAlreadyExistsException](write(fm, p, "second", overwrite = false))
+    assert(names(dir) == Set("1", ".1.crc"))
+    assert(read(fm, p) == "first")
   }
 
   test("an overwrite interrupted between its two moves leaves a readable file") {
