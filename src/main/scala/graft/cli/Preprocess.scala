@@ -20,7 +20,9 @@ object Preprocess {
     val raw = Clickstream.loadCsv(spark, input)
     val features = Featurize.leakageFreeSessionFeatures(raw)
     features.write.mode("overwrite").parquet(output)
-    spark.read.parquet(output).count()
+    // read back with the schema just written: inferring it again from the
+    // footers would cost a Spark job
+    spark.read.schema(features.schema).parquet(output).count()
   }
 
   def main(args: Array[String]): Unit = {

@@ -62,14 +62,20 @@ object DistributedSgd {
       Seq(avg(col(c).cast("double")).as(s"m_$c"), stddev_samp(col(c).cast("double")).as(s"s_$c"))
     } :+ count(lit(1)).cast("double").as("n_rows")
     val stats = df.agg(statExprs.head, statExprs.tail: _*).collect()(0)
-    val mean = Array.tabulate(n)(i => stats.getDouble(2 * i))
+    // a feature with no non-null value (an empty or all-null input) has a
+    // null mean and deviation, and one value a null deviation: such a
+    // feature standardizes to the constant 0
+    def stat(i: Int): Double = if (stats.isNullAt(i)) 0.0 else stats.getDouble(i)
+    val mean = Array.tabulate(n)(i => stat(2 * i))
     val std = Array.tabulate(n) { i =>
-      val s = stats.getDouble(2 * i + 1); if (s.isNaN) 0.0 else s
+      val s = stat(2 * i + 1); if (s.isNaN) 0.0 else s
     }
     val rows = stats.getDouble(2 * n)
 
     val weights = Array.fill(n)(0.0)
     var bias = 0.0
+    // no rows, no gradient (its sums are null): the untrained model
+    if (rows == 0) return Model(weights, bias, mean, std)
 
     def xhat(i: Int): Column =
       if (std(i) > 1e-12) (col(featureCols(i)).cast("double") - lit(mean(i))) / lit(std(i))

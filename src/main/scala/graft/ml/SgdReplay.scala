@@ -56,10 +56,13 @@ object SgdReplay {
     }
     val mm = df.agg(mmExprs.head, mmExprs.tail: _*).collect()(0)
     val cols = keep.map(col) ++ featureCols.zipWithIndex.map { case (c, i) =>
-      val mn = mm.getDouble(2 * i)
-      val mx = mm.getDouble(2 * i + 1)
+      def mn = mm.getDouble(2 * i)
+      def mx = mm.getDouble(2 * i + 1)
+      // min and max are null together, when the feature has no non-null
+      // value (an empty or all-null input): a constant feature, as the
+      // oracle's `CASE WHEN mx > mn` reads null bounds
       val xq =
-        if (mx > mn)
+        if (!mm.isNullAt(2 * i) && mx > mn)
           floor((col(c).cast("double") - lit(mn)) / (lit(mx) - lit(mn)) * lit(1000000.0d) + lit(0.5d))
             .cast("long")
         else lit(0L)
@@ -98,6 +101,9 @@ object SgdReplay {
         Seq(sum(col("gq")).as("gb"), count(lit(1)).as("n"))
       val g = withG.agg(sums.head, sums.tail: _*).collect()(0)
       val n = g.getLong(nFeatures + 1).toDouble
+      // an empty input has no gradient (its sums are null) and no row to
+      // score: the model stays at its start
+      if (n == 0) return m
       m = QModel(
         m.weights.zipWithIndex.map { case (w, i) =>
           w - math.floor(g.getLong(i).toDouble / (n * 1000000.0d) + 0.5d).toLong

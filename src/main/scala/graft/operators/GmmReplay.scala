@@ -108,6 +108,12 @@ object GmmReplay {
       val piMicro0 = 1000000L / k
       var centers: Seq[(Long, Long, Seq[Long])] =
         seedCenters(pts, k).map { case (cid, mu) => (cid, piMicro0, mu) }
+      // no points, no seeds: the empty assignment, as the oracle returns.
+      // A non-empty input keeps every round's weights positive (each point
+      // gives at least half a unit of responsibility to some cluster).
+      if (centers.isEmpty)
+        return pts.select(col("vec_id"), lit(0L).as("cid"), lit(0L).as("resp_micro"))
+          .where(lit(false))
       var r = 0
       while (r < rounds) {
         val resp = respond(spark, pts, centers, twoSigmaSqE12)

@@ -10,13 +10,14 @@ import graft.GraftSession
   *
   * All loads are plain parquet scans — column pruning and predicate pushdown
   * reach the file scan untouched (verify with `.explain`: `PushedFilters`,
-  * `ReadSchema`). No caching here: callers decide lifetime.
+  * `ReadSchema`). No data caching here: callers decide lifetime. Only the
+  * file's schema is cached (see [[Tables.read]]), so a build does not run
+  * a footer-inference job per table read.
   */
 final case class Tables(spark: SparkSession, dir: String) {
   GraftSession.tune(spark)
 
-  private def p(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private def p(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
 
   /** Scan-parallelism floor for the CPU-kernel tables (documents,
     * embeddings). The driver's parquet files are written as a SINGLE row
@@ -130,27 +131,77 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  // partition-count probe cache: planning the same scan hundreds of times
-  // per Verify/Bench run would re-list the file each call; the count is a
-  // pure function of (file bytes, session parallelism, split confs), so the
-  // key carries the file's length+mtime (r21, ADVICE: a rewrite of the same
-  // path in one JVM must not serve a stale count); for a directory (a
-  // parquet dataset), the name, length and mtime of every file under it,
-  // since a directory's own length and mtime do not change when a part file
-  // is rewritten in place. Bounded: cleared if it ever exceeds MaxEntries (a
+  // One probe cache for the schema and the partition count of a table
+  // file: planning the same scan hundreds of times per Verify/Bench run
+  // would otherwise infer the footer schema (a Spark job) and re-list the
+  // file on every call. Each value is a pure function of the file's bytes
+  // and the session settings its key names (the parallelism, the parquet
+  // type-mapping confs), so the key carries the file's stamp
+  // (r21, ADVICE: a rewrite of the same path in one JVM must not serve a
+  // stale value). Bounded: cleared if it ever exceeds MaxEntries (a
   // long-lived JVM cycling many data dirs) — losing the cache only costs a
   // re-probe.
   private val MaxEntries = 1024
-  private val scanPartsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def stamp(f: java.io.File): String =
-    if (f.isDirectory)
-      Option(f.listFiles).getOrElse(Array.empty[java.io.File]).sortBy(_.getName)
-        .map(c => s"${c.getName}:${stamp(c)}").mkString("[", ",", "]")
-    else s"${f.length}@${f.lastModified}"
-  private[graft] def scanParts(key: String, path: String, df: DataFrame): Int = {
-    val full = s"$key#${stamp(new java.io.File(path))}"
-    if (scanPartsCache.size > MaxEntries) scanPartsCache.clear()
-    scanPartsCache.computeIfAbsent(full, _ => df.rdd.getNumPartitions).intValue
+  private val probes = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** The parquet-to-Spark type mapping: a schema inferred under one set of
+    * these values is not the schema under another (`nanosAsLong` turns
+    * TIMESTAMP(NANOS) into a long, or into an error when off).
+    */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  /** Name, length and mtime of a local file; for a directory (a parquet
+    * dataset), those of every file under it, since a directory's own length
+    * and mtime do not change when a part file is rewritten in place. None
+    * when nothing exists at `path` locally (another file system): such a
+    * path is probed on every call.
+    */
+  private def stamp(path: String): Option[String] = {
+    def of(f: java.io.File): String =
+      if (f.isDirectory)
+        Option(f.listFiles).getOrElse(Array.empty[java.io.File]).sortBy(_.getName)
+          .map(c => s"${c.getName}:${of(c)}").mkString("[", ",", "]")
+      else s"${f.length}@${f.lastModified}"
+    val f = new java.io.File(path)
+    if (f.exists) Some(of(f)) else None
   }
+
+  /** `probe` for `key` over the file at `path`, cached under the file's
+    * stamp. The probe runs outside the map's lock: schema inference is a
+    * Spark job, and Verify builds four queries at once. Two threads that
+    * miss the same key both probe, and the first value stored wins.
+    */
+  private def cached[T <: AnyRef](key: String, path: String)(probe: => T): T =
+    stamp(path).fold(probe) { st =>
+      val full = s"$key#$st"
+      val hit = probes.get(full)
+      if (hit != null) hit.asInstanceOf[T]
+      else {
+        val value = probe
+        if (probes.size >= MaxEntries) probes.clear()
+        val prev = probes.putIfAbsent(full, value)
+        (if (prev == null) value else prev).asInstanceOf[T]
+      }
+    }
+
+  /** The parquet file or dataset at `path`, read with its schema inferred
+    * once per file stamp and type-mapping confs, instead of by a
+    * footer-inference job on every read.
+    */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    val confs = SchemaConfs.map(k => spark.conf.getOption(k).getOrElse("")).mkString(",")
+    val schema = cached(s"schema:$path|$confs", path)(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The partition count `df`, a scan of `path`, plans, cached per `key`
+    * (which names the session parallelism).
+    */
+  private[graft] def scanParts(key: String, path: String, df: DataFrame): Int =
+    cached(s"parts:$key", path)(Integer.valueOf(df.rdd.getNumPartitions)).intValue
 }

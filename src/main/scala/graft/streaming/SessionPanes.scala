@@ -258,8 +258,10 @@ object SessionPanes {
       .filter(col(tsCol).isNotNull)
       .select(col("user_session"), col("event_type"), col("product_id"), col("price"),
         unix_micros(col(tsCol)).as("ts"), col(tsCol))
-      .as[Event](Encoders.product[Event])
-      .groupByKey(_.user_session)(Encoders.STRING)
+      // grouped by the column: groupByKey would decode every event once
+      // more, map-side, only to compute its key
+      .groupBy(col("user_session"))
+      .as[String, Event](Encoders.STRING, Encoders.product[Event])
       .flatMapGroupsWithState(OutputMode.Update(), GroupStateTimeout.EventTimeTimeout)(
         (session, it, st: GroupState[Panes]) => processGroup(session, it, st, windowUs, slideUs))
       .select(

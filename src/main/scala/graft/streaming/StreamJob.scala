@@ -3,6 +3,7 @@ package graft.streaming
 import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -124,20 +125,22 @@ object StreamJob {
     // columns 0-7 are the scored row, 8 is total_events; sums holds views,
     // carts, purchases, total_events, then the row count
     val summed = Array(1, 2, 3, 8)
-    val parts = batch
+    val projected = batch
       .select(col("user_session"), long("view_count"), long("cart_count"),
         long("purchase_count"), col("session_duration"), col("avg_price"),
         col("max_price"), col("unique_items"), long("total_events"))
-      .rdd
+    // folds the internal rows: only the kept rows become `Row`s
+    val parts = projected.queryExecution.toRdd
       .mapPartitions { it =>
         val sums = new Array[Long](5)
-        val kept = Array.newBuilder[Row]
+        val kept = Array.newBuilder[InternalRow]
         var n = 0
         it.foreach { r =>
           for (k <- summed.indices if !r.isNullAt(summed(k)))
             sums(k) = Math.addExact(sums(k), r.getLong(summed(k)))
           sums(4) += 1
-          if (n < maxScoredRows) { kept += r; n += 1 }
+          // the scan reuses its row object
+          if (n < maxScoredRows) { kept += r.copy(); n += 1 }
         }
         Iterator.single((sums, kept.result()))
       }
@@ -150,7 +153,9 @@ object StreamJob {
     val carts = totals(1)
     val purchases = totals(2)
     val conversion = if (carts == 0) 0.0 else purchases.toDouble / carts * 100.0
-    val rows: Array[Row] = parts.iterator.flatMap(_._2).take(maxScoredRows).toArray
+    val toRow = CatalystTypeConverters.createToScalaConverter(projected.schema)
+    val rows: Array[Row] =
+      parts.iterator.flatMap(_._2).take(maxScoredRows).map(toRow(_).asInstanceOf[Row]).toArray
 
     val predictions = rows.map { r =>
       def d(i: Int): Double = if (r.isNullAt(i)) 0.0 else r.get(i) match {

@@ -2,6 +2,7 @@ package graft
 
 import java.security.MessageDigest
 
+import org.apache.spark.sql.functions.lit
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GmmReplay
@@ -124,5 +125,15 @@ final class GmmReplaySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
     assert(run() === run())
+  }
+
+  test("an empty input returns the empty assignment, as the oracle does") {
+    import spark.implicits._
+    val df = blobs.toDF("vec_id", "embedding")
+    def run(in: org.apache.spark.sql.DataFrame) =
+      GmmReplay.softAssignments(spark, in, "embedding", d, k = 2, rounds = 2)
+    val out = run(df.where(lit(false)))
+    assert(out.collect().isEmpty)
+    assert(out.schema.map(f => f.name -> f.dataType) == run(df).schema.map(f => f.name -> f.dataType))
   }
 }

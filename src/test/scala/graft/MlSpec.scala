@@ -162,4 +162,17 @@ class MlSpec extends AnyFunSuite {
     assert(recs.count() > 0)
     assert(recs.select(size($"recommendations")).as[Int].collect().forall(_ <= 3))
   }
+
+  test("DistributedSgd: an empty input gives the untrained model, one row no null stats") {
+    import graft.ml.DistributedSgd
+    val df = spark.range(4).select(($"id" % 2).cast("int").as("label"),
+      $"id".cast("double").as("f0"), lit(null).cast("double").as("f1"))
+    val empty = DistributedSgd.fit(df.where(lit(false)), Seq("f0", "f1"), epochs = 3)
+    assert(empty.weights.toSeq == Seq(0.0, 0.0) && empty.bias == 0.0)
+    // one row: stddev_samp is null; an all-null feature: mean and stddev are
+    val one = DistributedSgd.fit(df.limit(1), Seq("f0", "f1"), epochs = 3)
+    assert(one.std.toSeq == Seq(0.0, 0.0) && one.weights.toSeq == Seq(0.0, 0.0))
+    val all = DistributedSgd.fit(df, Seq("f0", "f1"), epochs = 3)
+    assert(all.std(1) == 0.0 && all.weights(1) == 0.0 && all.weights(0) != 0.0)
+  }
 }

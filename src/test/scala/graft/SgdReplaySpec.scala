@@ -76,4 +76,21 @@ class SgdReplaySpec extends AnyFunSuite {
     val m = SgdReplay.fit(q, 2, epochs = 3)
     assert(m.weights.head == 0L) // gradient of an all-zero column is zero
   }
+
+  test("an empty input quantizes, keeps the start model and scores no row") {
+    val cols = Seq("f1", "f2", "f3")
+    val q = SgdReplay.quantize(fixture.where(lit(false)), cols, Seq("id", "label"))
+    val m = SgdReplay.fit(q, 3, epochs = 4)
+    assert(m == SgdReplay.QModel(Seq(0L, 0L, 0L), 0L))
+    assert(q.select($"id", SgdReplay.scoreMicros(m, 3)).collect().isEmpty)
+  }
+
+  test("an all-null feature quantizes to zero, as the oracle reads its null bounds") {
+    val cols = Seq("f1", "f2", "f3")
+    val q = SgdReplay.quantize(fixture.withColumn("f2", lit(null).cast("double")), cols,
+      Seq("id", "label"))
+    assert(q.filter($"x1" =!= 0L).count() == 0L && q.count() == 200L)
+    val m = SgdReplay.fit(q, 3, epochs = 4)
+    assert(m.weights(1) == 0L && m.weights(0) != 0L)
+  }
 }

@@ -1,7 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import scala.util.Try
+
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.graftbridge.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -118,6 +126,84 @@ class TablesSpec extends AnyFunSuite {
       val (after, fresh1) = probe()
       assert(fresh1 > fresh0)
       assert(after == fresh1, s"stale partition count $after, the rewritten directory plans $fresh1")
+    } finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
+  }
+
+  /** The Spark jobs `body` runs. */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      ListenerBus.drain(sc)
+      jobs.set(0)
+      val out = body
+      ListenerBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("schema cache: a second build of a table runs no Spark job") {
+    Tables(spark, TestSpark.Sf0001).lineitem
+    val (df, jobs) = jobsOf(Tables(spark, TestSpark.Sf0001).lineitem)
+    assert(jobs == 0)
+    assert(df.schema == spark.read.parquet(s"${TestSpark.Sf0001}/lineitem.parquet").schema)
+  }
+
+  test("schema cache: a file rewritten in place with a new length or mtime is inferred again") {
+    val dir = Files.createTempDirectory("tables_schema").toString
+    val file = java.nio.file.Paths.get(s"$dir/region.parquet")
+    def bytesOf(sql: String): Array[Byte] = {
+      val tmp = Files.createTempDirectory("tables_schema_src").toString + "/t.parquet"
+      spark.sql(sql).coalesce(1).write.parquet(tmp)
+      val ps = Files.list(java.nio.file.Paths.get(tmp))
+      try Files.readAllBytes(ps.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get())
+      finally ps.close()
+    }
+    Files.write(file, bytesOf("SELECT 1 AS r_regionkey, 'a' AS r_name"))
+    assert(Tables(spark, dir).region.columns.toSeq == Seq("r_regionkey", "r_name"))
+    // a new length
+    Files.write(file, bytesOf("SELECT 1L AS r_regionkey, 'a' AS r_name, 2.5D AS r_extra"))
+    val (df, jobs) = jobsOf(Tables(spark, dir).region)
+    assert(jobs > 0)
+    assert(df.columns.toSeq == Seq("r_regionkey", "r_name", "r_extra"))
+    assert(df.schema("r_regionkey").dataType == LongType)
+    assert(df.collect().map(_.toSeq) === Array(Seq(1L, "a", 2.5)))
+    assert(jobsOf(Tables(spark, dir).region)._2 == 0)
+    // the same bytes, a new mtime
+    assert(file.toFile.setLastModified(file.toFile.lastModified - 60000L))
+    assert(jobsOf(Tables(spark, dir).region)._2 > 0)
+  }
+
+  test("schema cache: a read under another nanosAsLong value gets its own entry") {
+    // events as older data ships it: parquet TIMESTAMP(NANOS)
+    val path = Files.createTempDirectory("tables_nanos").toString + "/events.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,false)); required int64 user_id; }")
+    val writer = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema).build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("ts", 1704164645123456789L).append("user_id", 1L))
+    finally writer.close()
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    val saved = spark.conf.getOption(conf)
+    def both = (Try(spark.read.parquet(path).schema), Try(Tables.read(spark, path).schema))
+    try {
+      spark.conf.set(conf, "true")
+      val (plainOn, cachedOn) = both
+      assert(cachedOn.get == plainOn.get && plainOn.get("ts").dataType == LongType)
+      spark.conf.set(conf, "false")
+      // whatever the plain read does under this value, the cached read does
+      // too: it never serves the LongType schema of the other value
+      val (plainOff, cachedOff) = both
+      assert(plainOff.map(_.toString).toEither.left.map(_.getClass) ==
+        cachedOff.map(_.toString).toEither.left.map(_.getClass))
+      spark.conf.set(conf, "true")
+      val (again, jobs) = jobsOf(Tables.read(spark, path).schema)
+      assert(again == plainOn.get && jobs == 0)
     } finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
 }
