@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.BlockBridge
 
 /** Session helpers shared by Verify / Bench / the dev tools / tests.
   *
@@ -215,11 +216,13 @@ object GraftSession {
 
   /** Release every block a query left behind: DataFrame caches (e.g. the
     * SGD feature persist), RDDs MLlib fits persist (ALS/KMeans/RF) and the
-    * iterative operators' localCheckpoint frames. Blocking, so eviction
-    * finishes before the caller's next timed region starts.
+    * iterative operators' localCheckpoint frames, through
+    * [[BlockBridge.release]] (no lineage WARN for the checkpoints).
+    * Blocking, so eviction finishes before the caller's next timed region
+    * starts.
     */
   def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    spark.sparkContext.getPersistentRDDs.values.foreach(BlockBridge.release(_, blocking = true))
   }
 }

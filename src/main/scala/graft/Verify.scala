@@ -38,19 +38,10 @@ object Verify {
     System.err.println(
       s"[verify] ${queries.size - failedNames.length} ok / ${failedNames.length} failed" +
         (if (failedNames.nonEmpty) failedNames.mkString(": ", ", ", "") else ""))
-    // Drop DataFrame caches and leftover MLlib RDD persists so the gate
-    // process ends with zero pinned blocks (leak hygiene; queries run
-    // concurrently above, so per-query cleanup would race — once at the
-    // end is the safe point). Locally-checkpointed RDDs (the iterative
-    // operators' eager localCheckpoint frames) are skipped: unpersisting
-    // one logs a lineage-truncated WARN that dirties the gate log, and
-    // their blocks die with the session a few lines below anyway.
-    // (isCheckpointed is the public probe: true exactly for materialized
-    // checkpoints, and this codebase only ever localCheckpoints.)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .filterNot(_.isCheckpointed)
-      .foreach(_.unpersist(blocking = false))
+    // Release every block the queries left pinned (leak hygiene; queries
+    // run concurrently above, so per-query cleanup would race — once at
+    // the end is the safe point).
+    GraftSession.release(spark)
     // toJson escapes backslash, quote and ALL control chars (<0x20) — a
     // tab or CR in builder-authored SQL would otherwise make the driver's
     // json.load fail and silently zero the round's correctness.

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * whole-row aggregate; the driver sees only the (nFeatures+1) gradient
   * sums and applies the step.
   *
-  * Determinism contract (the KMeansReplay / NOTES_r11 float discipline —
+  * Determinism contract (the KMeansReplay float discipline —
   * every number either an exact BIGINT or the result of a fixed tree of
   * single IEEE-754 ops both engines evaluate identically):
   *   - Features min–max quantize to integer micros `xq = floor((x − mn) /

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: each half-solve is one equi-join (ratings ⋈ small factor
   * side — broadcastable at 100 items; hash at web scale) + one hash
   * aggregate on the solved key; rounds are eager-localCheckpointed so
-  * plan depth stays constant (the PageRank/HyperBall discipline).
+  * plan depth stays constant.
   */
 object AlsReplay {
 

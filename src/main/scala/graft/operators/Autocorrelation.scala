@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * computed from EXACT integer sufficient statistics only (T, Σx, Σx²,
   * and per-lag Σ x_t·x_{t−ℓ} plus the two boundary sums), expanded so no
-  * float is ever aggregated (NOTES_r11 discipline); the final per-lag
+  * float is ever aggregated (the no-double-aggregate discipline); the final per-lag
   * value is one double expression over those integers with m = S/T —
   * replayed term-for-term by the oracle, floor(x·10⁶+0.5) output.
   *

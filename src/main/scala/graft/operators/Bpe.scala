@@ -25,8 +25,8 @@ import graft.expressions.BpeMerge
   *      a 1-row collect (the Components-style bounded driver probe);
   *   3. apply the merge to every word — a zero-shuffle projection through
   *      the native `PairMerge` kernel (greedy leftmost-first).
-  * N merges = N×(aggregate + projection); the vocab stays checkpointed and is
-  * swapped generation-to-generation like `Components` rounds.
+  * N merges = N×(aggregate + projection); the vocab generations run on
+  * [[Iterate]].
   *
   * The reference pipeline has no subword trainer (its TF-IDF tokenizer is
   * word-level, src/spark/preprocessing.py); this extends SURVEY §2.12's
@@ -78,99 +78,21 @@ object Bpe {
   ): Seq[Merge] = {
     require(nMerges >= 0 && nMerges <= 100000, "nMerges in 0..100000")
     val merges = new ArrayBuffer[Merge]()
-    // eager localCheckpoint per generation (not persist+count): the vocab's
-    // logical plan would otherwise grow by one mergePair projection per
-    // merge, and Catalyst re-analyzes the whole chain at every generation —
-    // the same linear-plan-growth profile the graph iterations showed (see
-    // PageRank's scaladoc); checkpointing keeps generation cost constant.
-    // Superseded generations release their MEMORY_AND_DISK blocks as soon
-    // as the next one materializes (with nMerges up to 100000 waiting for
-    // the ContextCleaner would accumulate real memory/disk pressure) —
-    // Dataset.unpersist only consults the CacheManager, so release goes
-    // through the checkpointed LogicalRDD directly.
-    var vocab = symbolized.localCheckpoint(true)
-    var i = 0
-    var done = false
-    while (i < nMerges && !done) {
-      val top = pairCounts(vocab)
+    val vocab = Iterate.until(symbolized, nMerges) { prev =>
+      val top = pairCounts(prev.frame)
         .orderBy(desc("cnt"), asc("l"), asc("r"))
         .limit(1)
         .collect() // exactly one row — bounded driver probe
-      if (top.isEmpty || top.head.getLong(2) < minPairCount) done = true
+      if (top.isEmpty || top.head.getLong(2) < minPairCount) None
       else {
         val (l, r, c) = (top.head.getString(0), top.head.getString(1), top.head.getLong(2))
-        merges += Merge(i, l, r, c)
-        val next = vocab
-          .withColumn("syms", BpeMerge.mergePair(col("syms"), l, r))
-          .localCheckpoint(true) // eager: materialized before the release below
-        releaseCheckpoint(vocab)
-        vocab = next
-        i += 1
+        merges += Merge(merges.size, l, r, c)
+        Some(prev.frame.withColumn("syms", BpeMerge.mergePair(col("syms"), l, r)))
       }
     }
+    Iterate.release(vocab)
     merges.toSeq
   }
-
-  /** Release an eagerly localCheckpoint'd frame's persisted blocks once it
-    * is superseded. `Dataset.unpersist` cannot do this — it only uncaches
-    * through the CacheManager, which never saw the checkpoint RDD's
-    * MEMORY_AND_DISK persist — so the release goes through the
-    * [[org.apache.spark.sql.execution.LogicalRDD]] the checkpointed frame
-    * wraps.
-    */
-  /** RDD.unpersist logs (synchronously) a lineage-truncated WARN for every
-    * locally checkpointed RDD — correct in general (the data can't come
-    * back), but graft's releases only ever target a SUPERSEDED merge
-    * generation, so the warning is noise that dirties the gate log (one
-    * line per merge × tokenizer family per Verify run). The r18/r19
-    * approach swapped the shared RDD class logger's LEVEL around the call,
-    * which also suppressed unrelated warnings other threads routed through
-    * that logger during the window, and the restore pinned an explicit
-    * level where the logger may have inherited one. This filter instead
-    * DENIES exactly the lineage-truncation message, from RDD class loggers
-    * only, with no level mutation and no suppression window (r19 ADVICE).
-    */
-  private object LineageWarnFilter
-      extends org.apache.logging.log4j.core.filter.AbstractFilter {
-    val installed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // scope: deny ONLY while the CALLING thread is inside graft's own
-    // releaseCheckpoint (RDD.unpersist logs the warning synchronously on
-    // the caller thread, and logger-config filters run on that thread
-    // before the event reaches any appender). Another thread's unpersist
-    // of a still-needed localCheckpoint keeps its warning — the filter is
-    // permanent in the config, its EFFECT is per-release-call.
-    val releasing: ThreadLocal[java.lang.Boolean] =
-      ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-    override def filter(e: org.apache.logging.log4j.core.LogEvent)
-        : org.apache.logging.log4j.core.Filter.Result =
-      if (releasing.get()
-          && e.getLoggerName != null
-          && e.getLoggerName.startsWith("org.apache.spark.rdd.")
-          && e.getMessage.getFormattedMessage
-            .contains("was locally checkpointed, its lineage has been"))
-        org.apache.logging.log4j.core.Filter.Result.DENY
-      else org.apache.logging.log4j.core.Filter.Result.NEUTRAL
-  }
-
-  private def ensureLineageWarnFilter(loggerName: String): Unit =
-    if (LineageWarnFilter.installed.compareAndSet(false, true)) {
-      val ctx = org.apache.logging.log4j.LogManager.getContext(false)
-        .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
-      // nearest enclosing LoggerConfig (the root unless the app configured
-      // one for the RDD classes) — the filter itself re-checks the logger
-      // name, so attaching at the ancestor does not widen its scope
-      ctx.getConfiguration.getLoggerConfig(loggerName).addFilter(LineageWarnFilter)
-    }
-
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        ensureLineageWarnFilter(r.rdd.getClass.getName)
-        LineageWarnFilter.releasing.set(java.lang.Boolean.TRUE)
-        try r.rdd.unpersist(blocking = false)
-        finally LineageWarnFilter.releasing.set(java.lang.Boolean.FALSE)
-      case _ => ()
-    }
 
   /** The learned merge table as a DataFrame (merge_idx, left, right, cnt). */
   def mergeTable(spark: SparkSession, wordCounts: DataFrame, nMerges: Int): DataFrame = {

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   *    the worst case;
   *  - the convergence probe per round is `limit(1).count()` on the changed
   *    set — a bounded driver action, the standard iterative-graph pattern;
-  *  - each round's labels are persisted and the previous round's are
-  *    unpersisted, so lineage never re-executes earlier rounds.
+  *  - the rounds run on [[Iterate]]: each round's labels are checkpointed
+  *    and the previous round's released once they are materialised, so
+  *    lineage never re-executes earlier rounds.
   *
   * At 100 TB the edge list (near-dup pairs) is orders of magnitude smaller
   * than the corpus, and every round is shuffle-bounded by it — this scales
@@ -58,44 +59,33 @@ object Components {
       .distinct().persist()
     // free first round: every node starts at the min of its 1-hop
     // neighborhood (one aggregate, no join), not at itself
-    var labels = bidir.groupBy(col("a"))
+    val init = bidir.groupBy(col("a"))
       .agg(least(col("a"), min(col("b"))).as("label"))
-      .withColumnRenamed("a", "node").localCheckpoint(true)
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
+      .withColumnRenamed("a", "node")
+    // the probe runs on the new round's checkpointed blocks
+    val unchanged = (_: Iterate.Round, next: Iterate.Round) =>
+      next.frame.filter(col("label") =!= col("old")).limit(1).count() == 0L
+    val labels = Iterate.until(init, maxIter, unchanged) { prev =>
       // neighbor-min: a node adopts the min label among itself + neighbors.
       // The node's previous label rides along as `old` (null on message
-      // rows; max ignores nulls) so the convergence probe below needs no
-      // extra join — one action per round total.
-      val msgs = bidir.join(labels.select(col("node"), col("label")),
+      // rows; max ignores nulls) so the convergence probe needs no extra
+      // join — one action per round total.
+      val msgs = bidir.join(prev.frame.select(col("node"), col("label")),
           col("a") === col("node"))
         .select(col("b").as("node"), col("label"), lit(null).cast("long").as("old"))
-      val own = labels.select(col("node"), col("label"), col("label").as("old"))
+      val own = prev.frame.select(col("node"), col("label"), col("label").as("old"))
       // persisted for the round: the chase join below references m on BOTH
       // sides, and without the cache the neighbor-min aggregate would
       // execute twice per round
-      val m = own.unionByName(msgs)
-        .groupBy(col("node")).agg(min(col("label")).as("label"), max(col("old")).as("old"))
-        .persist()
+      val m = prev.cache(own.unionByName(msgs)
+        .groupBy(col("node")).agg(min(col("label")).as("label"), max(col("old")).as("old")))
       // pointer chase: follow the label to ITS label (the label is always a
       // node id of the same component, so the hop stays inside it) — this
       // doubles the distance covered per round, log(diameter) rounds total
-      // eager localCheckpoint (not persist): truncates lineage so each
-      // round analyzes a constant-size plan — see PageRank's scaladoc for
-      // the r12 profile; the convergence probe then runs on checkpointed
-      // blocks
-      val next = m.join(
+      Some(m.join(
           m.select(col("node").as("_ln"), col("label").as("_ll")),
           col("label") === col("_ln"), "left")
-        .select(col("node"), coalesce(col("_ll"), col("label")).as("label"), col("old"))
-        .localCheckpoint(true)
-      val changed = next.filter(col("label") =!= col("old")).limit(1).count()
-      // next is materialized — the round-local cache can release now
-      m.unpersist(blocking = false)
-      labels = next
-      converged = changed == 0L
-      it += 1
+        .select(col("node"), coalesce(col("_ll"), col("label")).as("label"), col("old")))
     }
     bidir.unpersist(blocking = false)
     labels.select(col("node"), col("label").as("component"))

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * map-side-combined (node, reg) MAX — the register-merge cost per edge IS
   * the HyperANF economics (O(m) per edge, independent of ball sizes, where
   * exact BFS frontiers would explode). Rounds are eagerly
-  * `localCheckpoint`ed like [[PageRank]] so the lineage stays flat.
+  * `localCheckpoint`ed so the lineage stays flat.
   */
 object HyperBall {
 
@@ -54,6 +54,8 @@ object HyperBall {
         lit(t).as("t"), col("g").as("node"), col("nz"), col("est_e6"))
     var out = snap(0)
     var t = 1
+    // its own loop, not Iterate: `out` unions a snapshot of every round's
+    // counters, so a superseded round must stay materialised
     while (t <= rounds) {
       val prop = bi.join(cur, col("b") === col("g"))
         .select(col("a").as("g"), col("reg"), col("m"))

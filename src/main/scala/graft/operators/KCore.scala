@@ -20,10 +20,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is one degree aggregate + one semi-join pair,
   * all shuffling on the node key of the EDGE LIST (orders of magnitude
-  * smaller than the corpus that produced it). Per-round results are
-  * persisted and the previous round released, so lineage never
-  * re-executes earlier rounds (the [[Components]] discipline); the
-  * fixpoint probe is a bounded `count()` per round.
+  * smaller than the corpus that produced it). The rounds run on
+  * [[Iterate]], so lineage never re-executes earlier rounds; the fixpoint
+  * probe is the row count each round's checkpoint job yields.
   */
 object KCore {
 
@@ -41,25 +40,15 @@ object KCore {
   ): DataFrame = {
     require(k >= 1 && rounds >= 1, "KCore.peel: k and rounds must be >= 1")
     // one-pass both-directions spelling (GraphEdges): the edge builder
-    // runs once into the persisted frame, not once per union branch
-    var bi = GraphEdges.bothDirections(edges, srcCol, dstCol).persist()
-    var prevCount = bi.count()
-    var it = 0
-    var stable = false
-    while (it < rounds && !stable) {
-      val keep = bi.groupBy(col("a")).agg(count(lit(1)).as("deg"))
+    // runs once into the first checkpoint, not once per union branch
+    val bi = Iterate.until(GraphEdges.bothDirections(edges, srcCol, dstCol), rounds,
+        stop = (prev, next) => next.rows == prev.rows) { prev =>
+      val keep = prev.frame.groupBy(col("a")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("a").as("_k"))
-      val next = bi
+      Some(prev.frame
         .join(keep, col("a") === col("_k")).drop("_k")
-        .join(keep, col("b") === col("_k")).drop("_k")
-        .persist()
-      val n = next.count()
-      bi.unpersist(blocking = false)
-      bi = next
-      stable = n == prevCount
-      prevCount = n
-      it += 1
+        .join(keep, col("b") === col("_k")).drop("_k"))
     }
     bi.groupBy(col("a")).agg(count(lit(1)).as("degree"))
       .select(col("a").as("node"), col("degree"))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * clustering step of the reference's embedding pipeline (reference:
   * src/embeddings/cluster.py) — same Lloyd semantics, deterministic here.
   *
-  * Determinism contract (NOTES_r11 float discipline):
+  * Determinism contract (the no-double-aggregate float discipline):
   *   - Coordinates quantize to integer micros with the pure-IEEE
   *     `floor(x·10⁶ + 0.5)` spelling — every subsequent distance is an
   *     EXACT BIGINT sum of squares (associative, partition-order-free).

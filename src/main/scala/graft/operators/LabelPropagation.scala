@@ -26,9 +26,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: one round = one equi-join (edges ⋈ labels, shuffle keyed
   * by node) + two hash aggregates (label counts, then arg-max) — all
   * bounded by the edge list, which is orders of magnitude smaller than
-  * the corpus at 100 TB. Per-round eager `localCheckpoint` keeps BOTH
-  * execution and the logical plan flat (see [[PageRank]]'s scaladoc for
-  * the r12 profile behind the checkpoint discipline). The arg-max is
+  * the corpus at 100 TB. The rounds run on [[Iterate]]. The arg-max is
   * `max(struct(count, −label))` — a mergeable aggregate, no window, no
   * per-node row explosion.
   */
@@ -46,25 +44,20 @@ object LabelPropagation {
       dstCol: String = "dst",
       rounds: Int = 3
   ): DataFrame = {
-    // eager localCheckpoint, not persist+count: truncates lineage so every
-    // round re-analyzes a constant-size plan (PageRank's scaladoc has the
-    // r12 profile that motivated the switch); one-pass both-directions
+    // checkpointed once: every round joins it; one-pass both-directions
     // spelling so the edge builder runs once (GraphEdges)
     val bidir = GraphEdges.bothDirections(edges, srcCol, dstCol)
       .distinct().localCheckpoint(true)
-    var labels = bidir.select(col("a").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val msgs = bidir
+    val self = bidir.select(col("a").as("node")).distinct()
+      .withColumn("label", col("node"))
+    Iterate(self, rounds) { labels =>
+      bidir
         .join(labels.select(col("node").as("b"), col("label")), Seq("b"))
         .select(col("a").as("node"), col("label"))
-      labels = msgs
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("node"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("best"))
         .select(col("node"), (-col("best").getField("nl")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels.select(col("node"), col("label").as("community"))
+    }.select(col("node"), col("label").as("community"))
   }
 }

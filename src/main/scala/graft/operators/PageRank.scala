@@ -19,30 +19,11 @@ import org.apache.spark.sql.functions._
   * unrolled DuckDB spelling).
   *
   * Undirected: every node has degree ≥ 1, so there are no dangling-mass
-  * corrections to model. Iteration hygiene: eager `localCheckpoint` per
-  * round — per-round persist+count keeps EXECUTION flat but the LOGICAL
-  * plan still grows linearly, and Catalyst re-analyzes the whole chain
-  * every round (r12 profile at sf0.1: round 5 cost 2.5× round 1 under the
-  * persist discipline; flat ~0.2 s/round checkpointed — the
-  * GraphX/GraphFrames iterative practice). The loop-invariant
-  * degree-annotated edge list, node list and 1-row count are checkpointed
-  * once up front. Checkpoint blocks are executor-local (non-reliable);
-  * the session-hygiene sweep (`GraftSession.release`, which Bench runs
-  * between queries) reclaims them.
-  *
-  * PRODUCTION POSTURE for the localCheckpoint discipline (here and in every
-  * operator that cites this scaladoc — Components, LabelPropagation, KCore,
-  * HyperBall, Triangles, CommunityQuality, Bpe, QueryHelpers.wordCountsCkpt):
-  * `localCheckpoint` trades fault tolerance for latency — blocks live only
-  * on executors, so losing an executor mid-query kills the job instead of
-  * recomputing lineage. That is the right trade on this single-host harness
-  * and for any job whose re-run cost is acceptable. On a large shared
-  * cluster where executor loss is routine (spot nodes, preemption), switch
-  * the iteration hygiene to reliable `checkpoint()` with
-  * `sparkContext.setCheckpointDir` on HDFS/object storage: same
-  * plan-truncation effect, one extra write/read of the per-round state,
-  * survives executor loss. The choice is a deployment knob, not a plan
-  *-shape change — every operator above works identically under either.
+  * corrections to model. The rounds run on [[Iterate]]; the
+  * loop-invariant degree-annotated edge list, node list and 1-row count
+  * are checkpointed once up front, and the session-hygiene sweep
+  * (`GraftSession.release`, which Bench runs between queries) reclaims
+  * them.
   */
 object PageRank {
 
@@ -71,21 +52,18 @@ object PageRank {
     // count without re-running the distinct
     val nodes = biDeg.select(col("a").as("node")).distinct().localCheckpoint(true)
     val n = nodes.agg(count(lit(1)).as("_n")).localCheckpoint(true)
-    var r = nodes
+    val r0 = nodes
       .crossJoin(broadcast(n))
       .select(col("node"), round(lit(1.0) / col("_n"), 9).as("r"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      r = biDeg
+    Iterate(r0, iterations) { r =>
+      biDeg
         .join(r.withColumnRenamed("node", "a"), Seq("a"))
         .select(col("b").as("node"), (col("r") / col("d")).as("_c"))
         .groupBy(col("node")).agg(sum(col("_c")).as("_s"))
         .crossJoin(broadcast(n))
         .select(col("node"),
           round(lit(teleport) / col("_n") + lit(damping) * col("_s"), 9).as("r"))
-        .localCheckpoint(true)
-    }
-    r.select(col("node"), col("r").as("rank"))
+    }.select(col("node"), col("r").as("rank"))
   }
 
   /** Weighted PageRank over an undirected INTEGER-weighted edge list — the
@@ -100,7 +78,7 @@ object PageRank {
     * BIGINT, and the damped update `floor(teleport·10⁹/N + damping·s + 0.5)`
     * is one float expression per node-round. Weighted sums have per-edge
     * distinct addends where the unweighted loop's r/d terms collapse to a
-    * few values, so the no-double-aggregate discipline (NOTES r11) is
+    * few values, so the no-double-aggregate discipline is
     * load-bearing here, not belt-and-braces. `weightCol` must be a
     * positive integer on every edge.
     *
@@ -127,13 +105,12 @@ object PageRank {
     val biDeg = bi.join(deg, Seq("a")).localCheckpoint(true)
     val nodes = biDeg.select(col("a").as("node")).distinct().localCheckpoint(true)
     val n = nodes.agg(count(lit(1)).as("_n")).localCheckpoint(true)
-    var r = nodes
+    val r0 = nodes
       .crossJoin(broadcast(n))
       .select(col("node"),
         floor(lit(1e9) / col("_n") + lit(0.5)).cast("long").as("r_e9"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      r = biDeg
+    Iterate(r0, iterations) { r =>
+      biDeg
         .join(r.withColumnRenamed("node", "a"), Seq("a"))
         .select(col("b").as("node"),
           floor(col("r_e9").cast("double") * col("w") / col("wd") + lit(0.5))
@@ -144,8 +121,6 @@ object PageRank {
           floor(lit(teleport * 1e9) / col("_n")
             + lit(damping) * col("_s").cast("double") + lit(0.5))
             .cast("long").as("r_e9"))
-        .localCheckpoint(true)
-    }
-    r.select(col("node"), col("r_e9").as("rank_e9"))
+    }.select(col("node"), col("r_e9").as("rank_e9"))
   }
 }

@@ -29,10 +29,9 @@ import org.apache.spark.sql.functions._
   * degree-annotated edge list + one node-keyed aggregate + one join to
   * the checkpointed teleport table — the [[Components]]/[[PageRank]]
   * bounded-iteration shape; seeds attach via a semi join (never
-  * broadcast-assumed), no collect anywhere. Lineage hygiene matches
-  * [[PageRank]]: eager `localCheckpoint` per round (constant-size plans;
-  * see PageRank's scaladoc for the r12 profile), loop invariants
-  * checkpointed once; the session-hygiene sweep reclaims the blocks.
+  * broadcast-assumed), no collect anywhere. The rounds run on
+  * [[Iterate]]; loop invariants are checkpointed once and the
+  * session-hygiene sweep reclaims them.
   */
 object PersonalizedPageRank {
 
@@ -55,9 +54,7 @@ object PersonalizedPageRank {
     // join (deg + the join reference bi twice — see PageRank.ranks)
     val bi = GraphEdges.bothDirections(edges, srcCol, dstCol).localCheckpoint(true)
     // loop invariants checkpointed ONCE (degree folded into the edge list
-    // so rounds key one join, not two); per-round eager localCheckpoint
-    // truncates lineage — see PageRank's scaladoc for the r12 profile
-    // that motivated checkpoints over per-round persist+count
+    // so rounds key one join, not two)
     val deg = bi.groupBy(col("a")).agg(count(lit(1)).as("d"))
     val biDeg = bi.join(deg, Seq("a")).localCheckpoint(true)
     val nodes = biDeg.select(col("a").as("node")).distinct()
@@ -72,9 +69,8 @@ object PersonalizedPageRank {
         when(col("_seed") === 1L, expr(s"$T DIV _ns")).otherwise(lit(0L)).as("tele"),
         when(col("_seed") === 1L, expr(s"$S DIV _ns")).otherwise(lit(0L)).as("r0"))
       .localCheckpoint(true)
-    var r = base.select(col("node"), col("r0").as("r")).localCheckpoint(true)
-    for (_ <- 1 to iterations) {
-      r = biDeg
+    Iterate(base.select(col("node"), col("r0").as("r")), iterations) { r =>
+      biDeg
         .join(r.withColumnRenamed("node", "a"), Seq("a"))
         .select(col("b").as("node"), expr("r DIV d").as("_c"))
         .groupBy(col("node")).agg(sum(col("_c")).as("_s"))
@@ -83,8 +79,6 @@ object PersonalizedPageRank {
           (col("tele") +
             floor(lit(0.85d) * col("_s").cast("double") + lit(0.5d)).cast("long"))
             .as("r"))
-        .localCheckpoint(true)
-    }
-    r.select(col("node"), col("r").as("ppr_e12"))
+    }.select(col("node"), col("r").as("ppr_e12"))
   }
 }

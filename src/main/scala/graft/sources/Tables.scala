@@ -78,7 +78,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   // of parallelizing real kernel work (q_quantile_sketch 2.2 -> 7.4 s,
   // q_user_overlap 2.9 -> 4.5 s, q_rf_metrics 3.2 -> 4.7 s). It would also
   // reshuffle every sampled pipeline (sampleBy/randomSplit draw per
-  // (partition, position) — NOTES r5). The one scan-rooted heavy consumer
+  // (partition, position)). The one scan-rooted heavy consumer
   // (the sliding-window explode) gets the floor locally via
   // QueryHelpers.clickstreamPar instead.
   def events: DataFrame = {

@@ -35,7 +35,7 @@ class ParScanSpec extends AnyFunSuite {
     val pDocs = t.documents.queryExecution.executedPlan.toString
     assert(pDocs.contains("REPARTITION_BY_NUM"),
       s"documents must carry the guarded floor locally:\n$pDocs")
-    // the A/B-rejected tables stay on the plain scan (NOTES_r24 gotcha)
+    // the A/B-rejected tables stay on the plain scan (parScan pays only for kernel-heavy scans)
     for ((name, df) <- Seq("events" -> t.events, "lineitem" -> t.lineitem,
         "orders" -> t.orders, "embeddings" -> t.embeddings)) {
       val p = df.queryExecution.executedPlan.toString

@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.graftbridge.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -104,19 +101,8 @@ class ProcessBatchSpec extends AnyFunSuite {
   }
 
   test("one call launches exactly one Spark job") {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
     val df = frame(Mixed)
-    sc.addSparkListener(listener)
-    try {
-      ListenerBus.drain(sc)
-      jobs.set(0)
-      assert(run(df, 4).size == 1)
-      ListenerBus.drain(sc)
-      assert(jobs.get == 1)
-    } finally sc.removeSparkListener(listener)
+    val jobs = ListenerBus.countJobs(spark.sparkContext)(assert(run(df, 4).size == 1))
+    assert(jobs == 1)
   }
 }

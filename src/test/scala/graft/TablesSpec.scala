@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
@@ -9,9 +8,9 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.graftbridge.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Tables
@@ -130,26 +129,12 @@ class TablesSpec extends AnyFunSuite {
   }
 
   /** The Spark jobs `body` runs. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      ListenerBus.drain(sc)
-      jobs.set(0)
-      val out = body
-      ListenerBus.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf(body: => Any): Int = ListenerBus.countJobs(spark.sparkContext)(body)
 
   test("schema cache: a second build of a table runs no Spark job") {
     Tables(spark, TestSpark.Sf0001).lineitem
-    val (df, jobs) = jobsOf(Tables(spark, TestSpark.Sf0001).lineitem)
-    assert(jobs == 0)
+    var df: DataFrame = null
+    assert(jobsOf { df = Tables(spark, TestSpark.Sf0001).lineitem } == 0)
     assert(df.schema == spark.read.parquet(s"${TestSpark.Sf0001}/lineitem.parquet").schema)
   }
 
@@ -167,15 +152,15 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables(spark, dir).region.columns.toSeq == Seq("r_regionkey", "r_name"))
     // a new length
     Files.write(file, bytesOf("SELECT 1L AS r_regionkey, 'a' AS r_name, 2.5D AS r_extra"))
-    val (df, jobs) = jobsOf(Tables(spark, dir).region)
-    assert(jobs > 0)
+    var df: DataFrame = null
+    assert(jobsOf { df = Tables(spark, dir).region } > 0)
     assert(df.columns.toSeq == Seq("r_regionkey", "r_name", "r_extra"))
     assert(df.schema("r_regionkey").dataType == LongType)
     assert(df.collect().map(_.toSeq) === Array(Seq(1L, "a", 2.5)))
-    assert(jobsOf(Tables(spark, dir).region)._2 == 0)
+    assert(jobsOf(Tables(spark, dir).region) == 0)
     // the same bytes, a new mtime
     assert(file.toFile.setLastModified(file.toFile.lastModified - 60000L))
-    assert(jobsOf(Tables(spark, dir).region)._2 > 0)
+    assert(jobsOf(Tables(spark, dir).region) > 0)
   }
 
   test("schema cache: a read under another nanosAsLong value gets its own entry") {
@@ -202,7 +187,8 @@ class TablesSpec extends AnyFunSuite {
       assert(plainOff.map(_.toString).toEither.left.map(_.getClass) ==
         cachedOff.map(_.toString).toEither.left.map(_.getClass))
       spark.conf.set(conf, "true")
-      val (again, jobs) = jobsOf(Tables.read(spark, path).schema)
+      var again: StructType = null
+      val jobs = jobsOf { again = Tables.read(spark, path).schema }
       assert(again == plainOn.get && jobs == 0)
     } finally saved.fold(spark.conf.unset(conf))(spark.conf.set(conf, _))
   }
