@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 import graft.GraftSession
 import graft.operators.Featurize
-import graft.sources.Clickstream
+import graft.sources.{Clickstream, Sinks}
 
 /** Reference-parity preprocessing CLI
   * (reference: src/spark/preprocessing.py:127-150 — same flags):
@@ -12,6 +12,9 @@ import graft.sources.Clickstream
   *   runMain graft.cli.Preprocess --input events.csv --output features.parquet
   *
   * CSV → clean → leakage-free sessionization → session features → Parquet.
+  * Two Spark jobs per call, the shuffle map stage and the write; the
+  * returned row count comes from the write's commit statistics
+  * ([[Sinks.writeParquet]]), not from reading the output back.
   */
 object Preprocess {
 
@@ -19,10 +22,7 @@ object Preprocess {
     GraftSession.tune(spark)
     val raw = Clickstream.loadCsv(spark, input)
     val features = Featurize.leakageFreeSessionFeatures(raw)
-    features.write.mode("overwrite").parquet(output)
-    // read back with the schema just written: inferring it again from the
-    // footers would cost a Spark job
-    spark.read.schema(features.schema).parquet(output).count()
+    Sinks.writeParquet(features, output)
   }
 
   def main(args: Array[String]): Unit = {

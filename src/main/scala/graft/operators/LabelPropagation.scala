@@ -35,8 +35,8 @@ object LabelPropagation {
   /** (node, community) after `rounds` synchronous updates; community is a
     * node id (labels start as self). Isolated nodes don't appear (the
     * [[Components.connectedComponents]] convention). The returned frame is
-    * the final round's checkpointed labels; the session-hygiene sweep
-    * reclaims the blocks.
+    * the final round's checkpointed labels, the only blocks the call
+    * leaves pinned.
     */
   def communities(
       edges: DataFrame,
@@ -50,7 +50,7 @@ object LabelPropagation {
       .distinct().localCheckpoint(true)
     val self = bidir.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
-    Iterate(self, rounds) { labels =>
+    val out = try Iterate(self, rounds) { labels =>
       bidir
         .join(labels.select(col("node").as("b"), col("label")), Seq("b"))
         .select(col("a").as("node"), col("label"))
@@ -58,6 +58,7 @@ object LabelPropagation {
         .groupBy(col("node"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("best"))
         .select(col("node"), (-col("best").getField("nl")).as("label"))
-    }.select(col("node"), col("label").as("community"))
+    } finally Iterate.release(bidir)
+    out.select(col("node"), col("label").as("community"))
   }
 }

@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   * Undirected: every node has degree ≥ 1, so there are no dangling-mass
   * corrections to model. The rounds run on [[Iterate]]; the
   * loop-invariant degree-annotated edge list, node list and 1-row count
-  * are checkpointed once up front, and the session-hygiene sweep
-  * (`GraftSession.release`, which Bench runs between queries) reclaims
-  * them.
+  * are checkpointed once up front and released once the loop returns, so
+  * only the returned round stays pinned.
   */
 object PageRank {
 
@@ -55,7 +54,7 @@ object PageRank {
     val r0 = nodes
       .crossJoin(broadcast(n))
       .select(col("node"), round(lit(1.0) / col("_n"), 9).as("r"))
-    Iterate(r0, iterations) { r =>
+    val out = try Iterate(r0, iterations) { r =>
       biDeg
         .join(r.withColumnRenamed("node", "a"), Seq("a"))
         .select(col("b").as("node"), (col("r") / col("d")).as("_c"))
@@ -63,7 +62,8 @@ object PageRank {
         .crossJoin(broadcast(n))
         .select(col("node"),
           round(lit(teleport) / col("_n") + lit(damping) * col("_s"), 9).as("r"))
-    }.select(col("node"), col("r").as("rank"))
+    } finally Seq(bi, biDeg, nodes, n).foreach(Iterate.release)
+    out.select(col("node"), col("r").as("rank"))
   }
 
   /** Weighted PageRank over an undirected INTEGER-weighted edge list — the
@@ -109,7 +109,7 @@ object PageRank {
       .crossJoin(broadcast(n))
       .select(col("node"),
         floor(lit(1e9) / col("_n") + lit(0.5)).cast("long").as("r_e9"))
-    Iterate(r0, iterations) { r =>
+    val out = try Iterate(r0, iterations) { r =>
       biDeg
         .join(r.withColumnRenamed("node", "a"), Seq("a"))
         .select(col("b").as("node"),
@@ -121,6 +121,7 @@ object PageRank {
           floor(lit(teleport * 1e9) / col("_n")
             + lit(damping) * col("_s").cast("double") + lit(0.5))
             .cast("long").as("r_e9"))
-    }.select(col("node"), col("r_e9").as("rank_e9"))
+    } finally Seq(bi, biDeg, nodes, n).foreach(Iterate.release)
+    out.select(col("node"), col("r_e9").as("rank_e9"))
   }
 }

@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * the checkpointed teleport table — the [[Components]]/[[PageRank]]
   * bounded-iteration shape; seeds attach via a semi join (never
   * broadcast-assumed), no collect anywhere. The rounds run on
-  * [[Iterate]]; loop invariants are checkpointed once and the
-  * session-hygiene sweep reclaims them.
+  * [[Iterate]]; loop invariants are checkpointed once and released once
+  * the loop returns.
   */
 object PersonalizedPageRank {
 
@@ -69,7 +69,7 @@ object PersonalizedPageRank {
         when(col("_seed") === 1L, expr(s"$T DIV _ns")).otherwise(lit(0L)).as("tele"),
         when(col("_seed") === 1L, expr(s"$S DIV _ns")).otherwise(lit(0L)).as("r0"))
       .localCheckpoint(true)
-    Iterate(base.select(col("node"), col("r0").as("r")), iterations) { r =>
+    val out = try Iterate(base.select(col("node"), col("r0").as("r")), iterations) { r =>
       biDeg
         .join(r.withColumnRenamed("node", "a"), Seq("a"))
         .select(col("b").as("node"), expr("r DIV d").as("_c"))
@@ -79,6 +79,7 @@ object PersonalizedPageRank {
           (col("tele") +
             floor(lit(0.85d) * col("_s").cast("double") + lit(0.5d)).cast("long"))
             .as("r"))
-    }.select(col("node"), col("r").as("ppr_e12"))
+    } finally Seq(bi, biDeg, base).foreach(Iterate.release)
+    out.select(col("node"), col("r").as("ppr_e12"))
   }
 }

@@ -1,11 +1,13 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.graftbridge.WriteBridge
 
 /** Sinks (S2 + the layouts a 100 TB deployment needs).
   *
   * - `writeParquet`: plain overwrite parquet (reference S2,
-  *   preprocessing.py:123).
+  *   preprocessing.py:123); returns the rows written, so a caller needs
+  *   no second read of the output to count them.
   * - `writePartitioned`: hive-style directory partitioning on date-ish keys —
   *   readers filtering on the partition column scan only matching
   *   directories (`PartitionFilters` in the plan, zero data read for pruned
@@ -17,8 +19,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   */
 object Sinks {
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
+  /** The count is the write's own commit statistic: exact under task
+    * retry and no extra Spark job ([[WriteBridge]]).
+    */
+  def writeParquet(df: DataFrame, path: String): Long =
+    WriteBridge.save(df, "parquet", SaveMode.Overwrite, path)
 
   /** JSONL (newline-delimited JSON) — the de-facto training-data
     * interchange format: one document object per line, splittable when

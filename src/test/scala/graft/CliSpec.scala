@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graftbridge.ListenerBus
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cli.{CompareSpellings, Preprocess, TrainIntent}
@@ -9,20 +10,33 @@ import graft.cli.{CompareSpellings, Preprocess, TrainIntent}
 class CliSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("Preprocess CLI: reference-schema CSV → leakage-free features parquet") {
+  private val CsvHeader =
+    "event_time,event_type,product_id,category_id,category_code,brand,price,user_id,user_session"
+
+  /** A reference-schema CSV of `rows` under a fresh directory; returns
+    * (csv path, output path).
+    */
+  private def csvFixture(rows: Seq[String]): (String, String) = {
     val dir = Files.createTempDirectory("graft-cli")
     val csv = dir.resolve("events.csv")
-    val header = "event_time,event_type,product_id,category_id,category_code,brand,price,user_id,user_session"
-    val rows = Seq(
-      "2019-10-01 10:00:00 UTC,view,1,10,electronics.phone,apple,100.0,7,sA",
-      "2019-10-01 10:01:00 UTC,cart,1,10,electronics.phone,apple,100.0,7,sA",
-      "2019-10-01 10:02:00 UTC,purchase,1,10,,apple,100.0,7,sA",
-      "2019-10-01 10:03:00 UTC,view,2,11,,samsung,50.0,7,sA", // post-purchase: cut
-      "2019-10-01 11:00:00 UTC,view,3,12,apparel,,25.0,8,sB"
-    )
-    Files.write(csv, (header +: rows).mkString("\n").getBytes)
-    val out = dir.resolve("features").toString
-    val n = Preprocess.run(spark, csv.toString, out)
+    Files.write(csv, (CsvHeader +: rows).mkString("\n").getBytes)
+    (csv.toString, dir.resolve("features").toString)
+  }
+
+  private val FiveEvents = Seq(
+    "2019-10-01 10:00:00 UTC,view,1,10,electronics.phone,apple,100.0,7,sA",
+    "2019-10-01 10:01:00 UTC,cart,1,10,electronics.phone,apple,100.0,7,sA",
+    "2019-10-01 10:02:00 UTC,purchase,1,10,,apple,100.0,7,sA",
+    "2019-10-01 10:03:00 UTC,view,2,11,,samsung,50.0,7,sA", // post-purchase: cut
+    "2019-10-01 11:00:00 UTC,view,3,12,apparel,,25.0,8,sB"
+  )
+
+  private val FeatureColumns = Seq("user_session", "label", "view_count", "cart_count",
+    "session_duration", "avg_price", "max_price", "unique_items")
+
+  test("Preprocess CLI: reference-schema CSV → leakage-free features parquet") {
+    val (csv, out) = csvFixture(FiveEvents)
+    val n = Preprocess.run(spark, csv, out)
     assert(n == 2)
     val f = spark.read.parquet(out).collect()
       .map(r => r.getAs[String]("user_session") -> r).toMap
@@ -30,6 +44,23 @@ class CliSpec extends AnyFunSuite {
     assert(f("sA").getAs[Long]("view_count") == 1) // leaked view excluded
     assert(f("sA").getAs[Long]("session_duration") == 120)
     assert(f("sB").getAs[Int]("label") == 0)
+  }
+
+  test("Preprocess runs two Spark jobs, the map and the write, and no read-back") {
+    val (csv, out) = csvFixture(FiveEvents)
+    Preprocess.run(spark, csv, out) // warm: the same code paths, compiled
+    var n = -1L
+    val jobs = ListenerBus.countJobs(spark.sparkContext) { n = Preprocess.run(spark, csv, out) }
+    assert(n == 2L && spark.read.parquet(out).count() == 2L)
+    assert(jobs == 2, s"$jobs Spark jobs")
+  }
+
+  test("Preprocess on a header-only CSV writes a readable, empty features parquet") {
+    val (csv, out) = csvFixture(Nil)
+    assert(Preprocess.run(spark, csv, out) == 0L)
+    val back = spark.read.parquet(out)
+    assert(back.count() == 0L)
+    assert(back.columns.toSeq == FeatureColumns)
   }
 
   test("TrainIntent CLI: features parquet → metrics + saved model") {

@@ -85,6 +85,19 @@ class IterateSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.isEmpty && cacheManagerEmpty)
   }
 
+  test("the graph loops release their invariants: a built query pins only its returned round") {
+    val sc = spark.sparkContext
+    for (q <- Seq("q_pagerank", "q_ppr_contamination", "q_textrank_keywords",
+        "q_lpa_communities")) {
+      GraftSession.release(spark)
+      try {
+        val df = SparkEntry.queries(q)(spark, TestSpark.Sf0001)
+        df.write.format("noop").mode("overwrite").save()
+        assert(sc.getPersistentRDDs.keySet == Set(rddId(df)), q)
+      } finally GraftSession.release(spark)
+    }
+  }
+
   private class Capture extends AbstractAppender(
       "iterate-spec-capture", null, null, true, Property.EMPTY_ARRAY) {
     val messages = new ConcurrentLinkedQueue[String]
