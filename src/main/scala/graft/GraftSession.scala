@@ -162,23 +162,13 @@ object GraftSession {
       v
     }
     reg.createOrReplaceTempFunction(
-      "graft_top_k",
-      exprs => graft.expressions.TopKAgg(exprs.head,
-        litOf(exprs(1), "k").asInstanceOf[Number].intValue),
-      "built-in")
-    reg.createOrReplaceTempFunction(
       "graft_freq_sketch",
       exprs => graft.expressions.FreqSketch(exprs.head,
         litOf(exprs(1), "k").asInstanceOf[Number].intValue),
       "built-in")
     reg.createOrReplaceTempFunction(
       "graft_min_k_by",
-      exprs => graft.expressions.MinKByAgg(exprs.head, exprs(1),
-        litOf(exprs(2), "k").asInstanceOf[Number].intValue),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_min_k_by_str",
-      exprs => graft.expressions.MinKByStrAgg(exprs.head, exprs(1),
+      exprs => graft.expressions.MinKByAgg.of(exprs.head, exprs(1),
         litOf(exprs(2), "k").asInstanceOf[Number].intValue),
       "built-in")
     reg.createOrReplaceTempFunction(

@@ -1,21 +1,27 @@
 package graft.expressions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.util.{Comparator, PriorityQueue}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Exact bottom-k `(key, id)` pairs per group — [[TopKAgg]]'s shape, but
-  * keeping the SMALLEST k keys and carrying a long payload, which is what a
-  * deterministic sampling draw needs (the winners' ids, not just their
-  * keys). Ordering is lexicographic `(key ASC, id ASC)` — exactly the
-  * `Window.orderBy(key, id)` order of the window spelling, so both paths
-  * select the identical membership.
+import MinKByAgg.Entry
+
+/** Exact bottom-k `(key, id)` pairs per group: the k smallest under
+  * `(key ASC, id ASC)`, which is Spark's own sort order — the
+  * `Window.orderBy(key, id)` order of the `row_number` spelling — so both
+  * select the identical membership and ranks. The key is a DOUBLE (cast
+  * where [[MinKByAgg.of]] builds the aggregate) compared as Spark sorts
+  * doubles (−0.0 equals 0.0, NaN last); the id payload is any orderable
+  * type, compared with Spark's interpreted ordering for that type. The k
+  * largest values are the same aggregate on a negated key:
+  * `min_k_by(-v, v, k)`.
   *
   * As a `TypedImperativeAggregate` it combines map-side: each partition
   * ships at most k pairs per group through the shuffle regardless of group
@@ -23,9 +29,9 @@ import org.apache.spark.sql.types._
   * `row_number` must co-locate and sort the FULL group on one partition
   * (the hot-group hazard GroupCap documents). At 100 TB group sizes this is
   * the difference between shuffling the corpus and shuffling k·|groups|
-  * pairs.
+  * pairs. Rows with a null key or id are skipped.
   *
-  * Returns `array<struct<key: double, id: long>>` sorted ascending.
+  * Returns `array<struct<key: double, id: T>>` sorted ascending.
   */
 case class MinKByAgg(
     keyChild: Expression,
@@ -33,7 +39,7 @@ case class MinKByAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0
-) extends TypedImperativeAggregate[java.util.PriorityQueue[(Double, Long)]] {
+) extends TypedImperativeAggregate[PriorityQueue[Entry]] {
 
   require(k > 0 && k <= 65536, "k in 1..65536")
 
@@ -42,87 +48,91 @@ case class MinKByAgg(
   override def dataType: DataType = ArrayType(
     StructType(Seq(
       StructField("key", DoubleType, nullable = false),
-      StructField("id", LongType, nullable = false))),
+      StructField("id", idChild.dataType, nullable = false))),
     containsNull = false)
   override def prettyName: String = "graft_min_k_by"
 
-  import MinKByAgg.{beats, RevOrd}
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (keyChild.dataType != DoubleType)
+      TypeCheckResult.TypeCheckFailure(s"$prettyName needs a DOUBLE key (MinKByAgg.of casts it)")
+    else TypeUtils.checkForOrderingExpr(idChild.dataType, prettyName)
 
-  override def createAggregationBuffer(): java.util.PriorityQueue[(Double, Long)] =
-    new java.util.PriorityQueue[(Double, Long)](k + 1, RevOrd)
+  @transient private lazy val idOrd: Ordering[Any] =
+    TypeUtils.getInterpretedOrdering(idChild.dataType)
 
-  override def update(
-      heap: java.util.PriorityQueue[(Double, Long)],
-      input: InternalRow
-  ): java.util.PriorityQueue[(Double, Long)] = {
+  /** `(key ASC, id ASC)` of a candidate pair against a heap entry. */
+  private def cmp(key: Double, id: Any, e: Entry): Int = {
+    val c = SQLOrderingUtil.compareDoubles(key, e.key)
+    if (c != 0) c else idOrd.compare(id, e.id)
+  }
+
+  @transient private lazy val bestFirst: Comparator[Entry] = (a, b) => cmp(a.key, a.id, b)
+  // heap order: head = the current worst survivor, the eviction candidate
+  @transient private lazy val worstFirst: Comparator[Entry] = bestFirst.reversed()
+
+  private def enters(heap: PriorityQueue[Entry], key: Double, id: Any): Boolean =
+    heap.size < k || cmp(key, id, heap.peek()) < 0
+
+  private def push(heap: PriorityQueue[Entry], e: Entry): Unit = {
+    if (heap.size == k) heap.poll()
+    heap.add(e)
+  }
+
+  override def createAggregationBuffer(): PriorityQueue[Entry] =
+    new PriorityQueue[Entry](k + 1, worstFirst)
+
+  override def update(heap: PriorityQueue[Entry], input: InternalRow): PriorityQueue[Entry] = {
     val kv = keyChild.eval(input)
-    val iv = idChild.eval(input)
-    if (kv != null && iv != null) {
-      // tolerant numeric conversion like TopKAgg — the SQL registration
-      // (graft_min_k_by) has no coercion, so INT/FLOAT args must not CCE
-      val kd = kv match {
-        case x: java.lang.Number => x.doubleValue()
-        case other => other.asInstanceOf[Double]
+    // the key alone rules most rows out of a full heap: the payload is
+    // evaluated only when the key can enter, and copied out of the
+    // (reused) input row only when the pair does
+    if (kv != null) {
+      val key = kv.asInstanceOf[Double]
+      if (heap.size < k || SQLOrderingUtil.compareDoubles(key, heap.peek().key) <= 0) {
+        val id = idChild.eval(input)
+        if (id != null && enters(heap, key, id))
+          push(heap, new Entry(key, InternalRow.copyValue(id)))
       }
-      val il = iv match {
-        case x: java.lang.Number => x.longValue()
-        case other => other.asInstanceOf[Long]
-      }
-      val pair = (kd, il)
-      if (heap.size < k) heap.add(pair)
-      else if (beats(pair, heap.peek())) { heap.poll(); heap.add(pair) }
     }
     heap
   }
 
-  override def merge(
-      a: java.util.PriorityQueue[(Double, Long)],
-      b: java.util.PriorityQueue[(Double, Long)]
-  ): java.util.PriorityQueue[(Double, Long)] = {
+  override def merge(a: PriorityQueue[Entry], b: PriorityQueue[Entry]): PriorityQueue[Entry] = {
     val it = b.iterator()
     while (it.hasNext) {
-      val pair = it.next()
-      if (a.size < k) a.add(pair)
-      else if (beats(pair, a.peek())) { a.poll(); a.add(pair) }
+      val e = it.next()
+      if (enters(a, e.key, e.id)) push(a, e)
     }
     a
   }
 
-  override def eval(heap: java.util.PriorityQueue[(Double, Long)]): Any = {
-    val pairs = new Array[(Double, Long)](heap.size)
-    var i = 0
-    val it = heap.iterator()
-    while (it.hasNext) { pairs(i) = it.next(); i += 1 }
-    java.util.Arrays.sort(pairs, MinKByAgg.FwdOrd)
-    val rows = new Array[Any](pairs.length)
-    i = 0
-    while (i < pairs.length) {
-      rows(i) = new GenericInternalRow(Array[Any](pairs(i)._1, pairs(i)._2))
-      i += 1
-    }
-    new GenericArrayData(rows)
+  private def toArrayData(entries: Array[Entry]): GenericArrayData =
+    new GenericArrayData(entries.map(e => InternalRow(e.key, e.id)))
+
+  override def eval(heap: PriorityQueue[Entry]): Any = {
+    val entries = heap.toArray(new Array[Entry](heap.size))
+    java.util.Arrays.sort(entries, bestFirst)
+    toArrayData(entries)
   }
 
-  override def serialize(heap: java.util.PriorityQueue[(Double, Long)]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(heap.size)
-    val it = heap.iterator()
-    while (it.hasNext) {
-      val p = it.next()
-      out.writeDouble(p._1)
-      out.writeLong(p._2)
-    }
-    out.flush()
-    bos.toByteArray
-  }
+  // the buffer travels as one UnsafeRow holding the output-typed array
+  // (the serialisation of Spark's own `Collect`)
+  @transient private lazy val projection = UnsafeProjection.create(Array[DataType](dataType))
 
-  override def deserialize(bytes: Array[Byte]): java.util.PriorityQueue[(Double, Long)] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
+  override def serialize(heap: PriorityQueue[Entry]): Array[Byte] =
+    projection(InternalRow(toArrayData(heap.toArray(new Array[Entry](heap.size))))).getBytes
+
+  override def deserialize(bytes: Array[Byte]): PriorityQueue[Entry] = {
+    val row = new UnsafeRow(1)
+    row.pointTo(bytes, bytes.length)
+    val arr = row.getArray(0)
     val heap = createAggregationBuffer()
     var i = 0
-    while (i < n) { heap.add((in.readDouble(), in.readLong())); i += 1 }
+    while (i < arr.numElements()) {
+      val s = arr.getStruct(i, 2)
+      heap.add(new Entry(s.getDouble(0), s.get(1, idChild.dataType)))
+      i += 1
+    }
     heap
   }
 
@@ -136,31 +146,20 @@ case class MinKByAgg(
 
 object MinKByAgg {
 
-  /** Lexicographic `(key ASC, id ASC)`. */
-  private[expressions] object FwdOrd
-      extends java.util.Comparator[(Double, Long)] with Serializable {
-    def compare(a: (Double, Long), b: (Double, Long)): Int = {
-      val c = java.lang.Double.compare(a._1, b._1)
-      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-    }
-  }
+  /** One heap pair; `id` is owned (never points into a reused row). */
+  final class Entry(val key: Double, val id: Any)
 
-  /** Reversed — max-heap order: head = current worst survivor (the
-    * eviction candidate).
+  /** The constructor the Column API and the SQL registration
+    * (`graft_min_k_by`) share: the key is cast to DOUBLE here, so any
+    * numeric key (INT, DECIMAL, …) takes the same path.
     */
-  private[expressions] object RevOrd
-      extends java.util.Comparator[(Double, Long)] with Serializable {
-    def compare(a: (Double, Long), b: (Double, Long)): Int = FwdOrd.compare(b, a)
-  }
-
-  private[expressions] def beats(a: (Double, Long), b: (Double, Long)): Boolean =
-    FwdOrd.compare(a, b) < 0
+  def of(key: Expression, id: Expression, k: Int): MinKByAgg =
+    MinKByAgg(Cast(key, DoubleType), id, k)
 
   /** Column API: `min_k_by(key, id, k)` aggregate →
-    * `array<struct<key double, id long>>` ascending.
+    * `array<struct<key double, id T>>` ascending.
     */
   def min_k_by(key: Column, id: Column, k: Int): Column =
     ColumnBridge.column(
-      MinKByAgg(ColumnBridge.expression(key), ColumnBridge.expression(id), k)
-        .toAggregateExpression())
+      of(ColumnBridge.expression(key), ColumnBridge.expression(id), k).toAggregateExpression())
 }

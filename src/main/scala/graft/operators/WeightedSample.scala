@@ -82,8 +82,7 @@ object WeightedSample {
     * ≤ n pairs per group through the shuffle, where `row_number` must
     * co-locate and sort the whole group on one partition (the hot-group
     * hazard). One O(n·|groups|) agg + one equi-join on the unique id to
-    * recover the full rows — no full-group sort anywhere. `idCol` must be
-    * integral (the heap payload is a long).
+    * recover the full rows — no full-group sort anywhere.
     */
   def samplePerGroupAtScale(
       df: DataFrame,
@@ -95,14 +94,14 @@ object WeightedSample {
     val winners = df
       .filter(col(idCol).isNotNull && col(weightCol).isNotNull)
       .select(col(groupCol), esKey(col(idCol), col(weightCol)).as("_es"),
-        col(idCol).cast("long").as("_id"))
+        col(idCol).as("_id"))
       .groupBy(col(groupCol))
       .agg(graft.expressions.MinKByAgg.min_k_by(col("_es"), col("_id"), n).as("_top"))
       .select(col(groupCol), posexplode(col("_top")).as(Seq("_pos", "_s")))
       .select(col(groupCol), col("_s.id").as("_id"),
         (col("_pos") + 1).cast("long").as("es_rank"))
     df.join(winners,
-        df(groupCol) === winners(groupCol) && col(idCol).cast("long") === col("_id"))
+        df(groupCol) === winners(groupCol) && col(idCol) === col("_id"))
       .drop(winners(groupCol)).drop("_id")
   }
 }

@@ -41,7 +41,7 @@ object Zipf {
         wc.orderBy(col("n").desc, col("w")).limit(topN)
           .withColumn("rk", row_number().over(Window.orderBy(col("n").desc, col("w"))))
       else
-        // per-group top-N via the bounded string heap — O(topN) pairs per
+        // per-group top-N via the bounded heap, word as payload — O(topN) pairs per
         // group per partition through the shuffle, where the row_number
         // window would co-locate and SORT each group's entire vocabulary
         // to keep topN rows (real cost at a 10⁸-word per-source vocab).
@@ -49,8 +49,7 @@ object Zipf {
         // membership and ranks are identical; counts ≪ 2⁵³ stay exact in
         // the double key.
         wc.groupBy(gc: _*)
-          .agg(graft.expressions.MinKByStrAgg
-            .min_k_by_str((-col("n")).cast("double"), col("w"), topN).as("_top"))
+          .agg(graft.expressions.MinKByAgg.min_k_by(-col("n"), col("w"), topN).as("_top"))
           .select(gc :+ posexplode(col("_top")).as(Seq("_pos", "_kv")): _*)
           .select(gc :+ (col("_pos") + 1).as("rk") :+
             (-col("_kv.key")).cast("long").as("n") :+ col("_kv.id").as("w"): _*)

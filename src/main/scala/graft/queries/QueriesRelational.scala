@@ -867,13 +867,15 @@ private[graft] object QueriesRelational {
         round(stddev_samp(col("l_extendedprice")), 4).as("price_stddev"),
         count(lit(1)).as("n"))
     },
-    // custom TypedImperativeAggregate: bounded-heap top-k with map-side combine
+    // bounded-heap top-k with map-side combine: the 5 smallest −price
+    // keys per flag, the price itself as the payload
     "q_topk_prices" -> { (s, d) =>
       Tables(s, d).lineitem
         .groupBy(col("l_returnflag"))
-        .agg(graft.expressions.TopKAgg.top_k(col("l_extendedprice"), 5).as("topk"))
-        .select(col("l_returnflag"), posexplode(col("topk")).as(Seq("pos", "price")))
-        .select(col("l_returnflag"), (col("pos") + 1).as("rank"), col("price"))
+        .agg(graft.expressions.MinKByAgg
+          .min_k_by(-col("l_extendedprice"), col("l_extendedprice"), 5).as("topk"))
+        .select(col("l_returnflag"), posexplode(col("topk")).as(Seq("pos", "kv")))
+        .select(col("l_returnflag"), (col("pos") + 1).as("rank"), col("kv.id").as("price"))
     },
     // Fellegi–Sunter record linkage (operators.RecordLinkage): blocking
     // equi-join (never all-pairs), per-field agreement vector, exact

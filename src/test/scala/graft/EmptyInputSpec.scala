@@ -16,7 +16,7 @@ class EmptyInputSpec extends AnyFunSuite {
   private lazy val emptyDir: String = {
     val dir = Files.createTempDirectory("empty_tables").toString
     GraftSession.tune(spark)
-    for (t <- Seq("events", "embeddings", "documents"))
+    for (t <- Seq("events", "embeddings", "documents", "lineitem"))
       spark.read.parquet(s"${TestSpark.Sf0001}/$t.parquet").where(lit(false))
         .write.parquet(s"$dir/$t.parquet")
     dir
@@ -25,10 +25,34 @@ class EmptyInputSpec extends AnyFunSuite {
   for (q <- Seq("q_gmm_soft", "q_sgd_det", "q_sgd_intent_scores",
       // the Iterate loops: an empty edge list runs every round on no rows
       "q_pagerank", "q_ppr_contamination", "q_kcore", "q_lpa_communities",
-      "q_dedup_components", "q_bpe_merges", "q_bytebpe_merges", "q_textrank_keywords"))
+      "q_dedup_components", "q_bpe_merges", "q_bytebpe_merges", "q_textrank_keywords",
+      // the bounded-heap aggregate's consumers: no group, no heap
+      "q_topk_prices", "q_weighted_sample", "q_zipf_by_source", "q_zipf_drift"))
     test(s"$q returns no row on empty tables") {
       val out = SparkEntry.queries(q)(spark, emptyDir)
       try assert(out.collect().isEmpty && out.columns.nonEmpty)
       finally GraftSession.release(spark)
     }
+
+  test("q_zipf_slope on empty documents: one row, nw 0 and null moments, as its global-aggregate oracle") {
+    val rows = SparkEntry.queries("q_zipf_slope")(spark, emptyDir).collect()
+    assert(rows.length == 1)
+    assert(rows(0).getLong(0) == 0L && (1 to 3).forall(rows(0).isNullAt))
+  }
+
+  /** One document, text "a a b": ranks (1, 2) with counts (2, 1), so the
+    * micro-quantized ln terms are x = (0, L) and y = (L, 0) with
+    * L = floor(ln 2 · 10⁶ + 0.5), num = −L², den = L², slope −1.
+    */
+  test("q_zipf_slope and q_zipf_by_source on a one-row documents table") {
+    val dir = Files.createTempDirectory("one_doc").toString
+    spark.read.parquet(s"${TestSpark.Sf0001}/documents.parquet").limit(1)
+      .withColumn("text", lit("a a b")).withColumn("source", lit("web"))
+      .write.parquet(s"$dir/documents.parquet")
+    val l = math.floor(math.log(2.0) * 1e6 + 0.5).toLong
+    val slope = SparkEntry.queries("q_zipf_slope")(spark, dir).collect()
+    assert(slope.map(_.toSeq) sameElements Array(Seq(2L, -l * l, l * l, -1.0)))
+    val bySource = SparkEntry.queries("q_zipf_by_source")(spark, dir).collect()
+    assert(bySource.map(_.toSeq) sameElements Array(Seq("web", 2L, -l * l, l * l, -1.0)))
+  }
 }

@@ -1,19 +1,23 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.expressions.{TextSketches, TopKAgg}
+import graft.expressions.MinKByAgg.min_k_by
+import graft.expressions.TextSketches
 import graft.ml.OnlineLogreg
 
 class ExpressionSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("TopKAgg: exact top-k with duplicates, map-side combine across partitions") {
+  test("min_k_by(-v, v, k): exact top-k with duplicates, combined across partitions") {
     val df = spark.range(0, 1000).repartition(8)
       .select(($"id" % 3).cast("string").as("g"), ($"id" % 97).cast("double").as("v"))
-    val got = df.groupBy($"g").agg(TopKAgg.top_k($"v", 4).as("topk"))
+    val got = df.groupBy($"g").agg(min_k_by(-$"v", $"v", 4).as("topk"))
+      .select($"g", expr("transform(topk, s -> s.id)"))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
     // values 0..96 repeat; per group the top distinct residues mod 97 present
     assert(got.values.forall(_.length == 4))
@@ -22,11 +26,67 @@ class ExpressionSpec extends AnyFunSuite {
     assert(got("0") == all.toSeq)
   }
 
-  test("TopKAgg: groups smaller than k return all values") {
+  test("min_k_by: groups smaller than k return all values") {
     val df = Seq(("a", 1.0), ("a", 5.0), ("b", 2.0)).toDF("g", "v")
-    val got = df.groupBy($"g").agg(TopKAgg.top_k($"v", 10).as("t"))
+    val got = df.groupBy($"g").agg(min_k_by(-$"v", $"v", 10).as("t"))
+      .select($"g", expr("transform(t, s -> s.id)"))
       .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
     assert(got("a") == Seq(5.0, 1.0) && got("b") == Seq(2.0))
+  }
+
+  /** (key bits, id) pairs of the `row_number() <= k` spelling per group,
+    * in rank order — the result min_k_by must reproduce. Keys compare as
+    * bit patterns, so -0.0 and 0.0 differ and NaN equals itself.
+    */
+  private def windowBottomK(df: DataFrame, k: Int): Map[String, Seq[(Long, String)]] =
+    df.withColumn("rn", row_number().over(Window.partitionBy($"g").orderBy($"key", $"id")))
+      .filter($"rn" <= k).orderBy($"rn")
+      .select($"g", $"key", $"id".cast("string")).as[(String, Double, String)].collect()
+      .groupBy(_._1).map { case (g, rs) => g -> rs.map(r => (bits(r._2), r._3)).toSeq }
+
+  private def heapBottomK(df: DataFrame, k: Int): Map[String, Seq[(Long, String)]] =
+    df.groupBy($"g").agg(min_k_by($"key", $"id", k).as("t"))
+      .select($"g", explode($"t").as("s"))
+      .select($"g", $"s.key", $"s.id".cast("string")).as[(String, Double, String)].collect()
+      .groupBy(_._1).map { case (g, rs) => g -> rs.map(r => (bits(r._2), r._3)).toSeq }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+
+  test("min_k_by orders keys as Spark sorts doubles: -0.0 equals 0.0, NaN last") {
+    val df = Seq((-0.0, 5L), (0.0, 3L), (Double.NaN, 1L), (Double.NaN, 0L),
+      (-1.0, 9L), (Double.PositiveInfinity, 2L))
+      .toDF("key", "id").withColumn("g", lit("g"))
+    for (k <- 1 to 6) assert(heapBottomK(df, k) == windowBottomK(df, k), s"k = $k")
+    assert(heapBottomK(df, 2)("g").map(_._2) == Seq("9", "3"))
+  }
+
+  test("min_k_by with a string payload equals the row_number spelling across 16 input partitions") {
+    val rnd = new scala.util.Random(17)
+    val rows = Seq.fill(4000) {
+      (s"g${rnd.nextInt(7)}", rnd.nextInt(40) - 20.0, rnd.alphanumeric.take(1 + rnd.nextInt(3)).mkString)
+    }
+    val df = rows.toDF("g", "key", "id").repartition(16)
+    for (k <- Seq(1, 25, 700)) assert(heapBottomK(df, k) == windowBottomK(df, k), s"k = $k")
+  }
+
+  test("SQL graft_min_k_by: DECIMAL and INT keys, DECIMAL, DATE and STRING payloads in SQL order") {
+    GraftSession.tune(spark)
+    spark.sql(
+      """SELECT CAST(k AS DECIMAL(10, 2)) AS kd, CAST(k * 100 AS INT) AS ki,
+        |       CAST(p AS DECIMAL(10, 2)) AS pd, date_add(DATE'2024-01-01', CAST(p AS INT)) AS pt,
+        |       CAST(p AS STRING) AS ps
+        |FROM VALUES (1.25, 7), (0.5, 3), (1.25, 2), (-3.0, 9), (0.5, 1), (2.0, 0) AS t(k, p)""".stripMargin)
+      .createOrReplaceTempView("mkb_in")
+    for (key <- Seq("kd", "ki"); id <- Seq("pd", "pt", "ps")) {
+      val heap = spark.sql(s"SELECT transform(graft_min_k_by($key, $id, 4), s -> s.id) FROM mkb_in")
+        .collect()(0).getSeq[Any](0)
+      val sorted = spark.sql(s"SELECT $id FROM mkb_in ORDER BY $key, $id LIMIT 4")
+        .collect().map(_.get(0)).toSeq
+      assert(heap == sorted, s"key $key, id $id")
+    }
+    val err = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT graft_min_k_by(kd, map(ps, pd), 2) FROM mkb_in").collect())
+    assert(err.getMessage.contains("graft_min_k_by"), err.getMessage)
   }
 
   test("SQL registration: graft_simhash64 / graft_minhash_sig usable from SQL") {
@@ -75,11 +135,11 @@ class ExpressionSpec extends AnyFunSuite {
     assert(c.getDouble(2) == r.getDouble(2))
   }
 
-  test("SQL registration: graft_top_k / graft_freq_sketch / graft_bpe_merge_pair") {
+  test("SQL registration: graft_min_k_by / graft_freq_sketch / graft_bpe_merge_pair") {
     GraftSession.tune(spark)
     Seq(("a", 5.0), ("a", 1.0), ("b", 2.0), ("a", 9.0))
       .toDF("item", "v").createOrReplaceTempView("hh_in")
-    val topk = spark.sql("SELECT graft_top_k(v, 2) AS t FROM hh_in")
+    val topk = spark.sql("SELECT transform(graft_min_k_by(-v, v, 2), s -> s.id) AS t FROM hh_in")
       .collect()(0).getSeq[Double](0)
     assert(topk == Seq(9.0, 5.0))
     val keys = spark.sql("SELECT map_keys(graft_freq_sketch(item, 1)) AS k FROM hh_in")
@@ -89,12 +149,12 @@ class ExpressionSpec extends AnyFunSuite {
       "SELECT graft_bpe_merge_pair(array('l', 'o', 'w'), 'l', 'o') AS m")
       .collect()(0).getSeq[String](0)
     assert(merged == Seq("lo", "w"))
-    // min_k_by must tolerate INT args from SQL (no coercion in the
-    // registration; the old asInstanceOf cast threw ClassCastException)
+    // INT key and payload from SQL: the key is cast to DOUBLE where the
+    // aggregate is built, the payload keeps its type
     val mkb = spark.sql(
       "SELECT transform(graft_min_k_by(CAST(v AS INT), CAST(v AS INT), 2), s -> s.id) AS t FROM hh_in")
-      .collect()(0).getSeq[Long](0)
-    assert(mkb == Seq(1L, 2L))
+      .collect()(0).getSeq[Int](0)
+    assert(mkb == Seq(1, 2))
   }
 
   test("native kernels: null input → null; interpreted eval matches codegen") {

@@ -170,12 +170,19 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), s"posting-list equi-join expected:\n${p.take(2000)}")
   }
 
-  test("per-source zipf top-N ships the bounded string heap: partial min_k_by_str, no vocab window sort") {
+  test("per-source zipf top-N ships the bounded heap: partial min_k_by, no vocab window sort") {
     val p = plan("q_zipf_by_source")
-    assert(p.contains("partial_graft_min_k_by_str"),
-      s"map-side partial string-heap aggregation expected:\n${p.take(2000)}")
+    assert(p.contains("partial_graft_min_k_by"),
+      s"map-side partial heap aggregation expected:\n${p.take(2000)}")
     assert(!p.contains("Window"),
       "the per-group heap path must not fall back to a row_number window over the full vocabulary")
+  }
+
+  test("top-k prices ship the bounded heap: partial min_k_by, no window sort") {
+    val p = plan("q_topk_prices")
+    assert(p.contains("partial_graft_min_k_by"),
+      s"map-side partial heap aggregation expected:\n${p.take(2000)}")
+    assert(!p.contains("Window"), "the heap path must not fall back to row_number")
   }
 
   test("z-order key is a pure zero-shuffle projection") {

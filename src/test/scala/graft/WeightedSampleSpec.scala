@@ -92,7 +92,7 @@ class WeightedSampleSpec extends AnyFunSuite {
     val df = (1L to 100L).map(i => (i, if (i <= 3) "tiny" else "big")).toDF("id", "g")
     val got = df.repartition(13)
       .groupBy($"g")
-      .agg(graft.expressions.MinKByAgg.min_k_by($"id".cast("double"), $"id", 10).as("t"))
+      .agg(graft.expressions.MinKByAgg.min_k_by($"id", $"id", 10).as("t"))
       .select($"g", expr("transform(t, s -> s.id)").as("ids"))
       .as[(String, Seq[Long])].collect().toMap
     assert(got("tiny") == (1L to 3L))
