@@ -11,8 +11,9 @@ import org.apache.spark.sql.types._
   * the Σ(a−b)² sibling of [[LongDot]], serving the quantized-micros replay
   * loops ([[graft.operators.KMeansReplay]], [[graft.operators.IvfReplay]],
   * [[graft.operators.GmmReplay]], [[graft.operators.KCenter]]): each Lloyd /
-  * E-step / probe round cross-joins the corpus against k broadcast centers
-  * and evaluated the HOF spelling
+  * E-step / probe round scores every point against k centers
+  * ([[graft.functions.VectorFunctions.centerDistances]]) and evaluated the
+  * HOF spelling
   * `aggregate(zip_with(a, b, (x,y) => (x-y)*(x-y)), 0L, _+_)` per pair —
   * two boxed tree-walks and a materialized intermediate array per distance,
   * the same non-codegen-hot-path class the LongDot kernel removed from the

@@ -52,6 +52,22 @@ object VectorFunctions {
   def sqDistLong(a: Column, b: Column): Column =
     graft.expressions.LongSqDist.sq_dist_long(a, b)
 
+  /** `array<struct<dist, cid>>`: the exact [[sqDistLong]] from `xq` to
+    * each of `centers` (`(cid, cx)`), in the centers' order. The centers
+    * ship as ONE array literal under one `zip_with`, so the expression
+    * and the plan keep their shape whatever k or the values: a codegen'd
+    * stage holds the literal as a reference object, and new centers
+    * compile no new class. `xq` enters as an argument (`array_repeat`),
+    * never inside the lambda, so CollapseProject cannot inline its
+    * producer into the per-center body. `array_min` of the result is the
+    * nearest center with ties to the smaller cid (`min(struct(dist,
+    * cid))`); `sort_array` ranks them under the same order. A null
+    * element in `xq` gives every center a null dist, which sorts first.
+    */
+  def centerDistances(xq: Column, centers: Seq[(Long, Seq[Long])]): Column =
+    zip_with(array_repeat(xq, centers.size), typedLit(centers),
+      (x, c) => named_struct(lit("dist"), sqDistLong(x, c("_2")), lit("cid"), c("_1")))
+
   /** Since r21 the Σ(Δ²) fold runs in the native kernel
     * ([[graft.expressions.PqKernels]]) — identical left-to-right IEEE
     * order, so the sqrt sees the same bits (PqKernelsParitySpec).
@@ -64,13 +80,22 @@ object VectorFunctions {
     * long bucket id — equal buckets are LSH candidates for high cosine
     * similarity (random hyperplane LSH, Charikar 2002).
     */
-  def hyperplaneBucket(v: Column, planes: Seq[Seq[Double]]): Column = {
-    require(planes.nonEmpty && planes.size <= 62, "1..62 hyperplanes")
-    planes.zipWithIndex
-      .map { case (plane, j) =>
-        val planeCol = array(plane.map(lit): _*)
-        when(dot(v, planeCol) >= 0.0, lit(1L << j)).otherwise(lit(0L))
-      }
+  def hyperplaneBucket(v: Column, planes: Seq[Seq[Double]]): Column =
+    signBits(planes.map(plane => dot(v, array(plane.map(lit): _*)) >= 0.0))
+
+  /** The exact-integer [[hyperplaneBucket]] over `array<bigint>` micros:
+    * bit b is set when `dotLong(xq, planes(b)) >= 0`. Each plane is an
+    * array literal (a codegen reference object). A null element in `xq`
+    * makes every dot null, so such a vector gets bucket 0.
+    */
+  def hyperplaneBucketLong(xq: Column, planes: Seq[Seq[Long]]): Column =
+    signBits(planes.map(plane => dotLong(xq, typedLit(plane)) >= 0L))
+
+  /** Packs one sign test per plane into a long, bit b for plane b. */
+  private def signBits(set: Seq[Column]): Column = {
+    require(set.nonEmpty && set.size <= 62, "1..62 hyperplanes")
+    set.zipWithIndex
+      .map { case (s, b) => when(s, lit(1L << b)).otherwise(lit(0L)) }
       .reduce(_ + _)
   }
 

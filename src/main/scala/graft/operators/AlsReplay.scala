@@ -144,31 +144,21 @@ object AlsReplay {
       solved(aD * d2D - bD * d1D).as("f2"))
   }
 
-  /** Implicit-feedback replay: same md5 init / round shape / caps as
-    * [[factors]], with the Hu–Koren half-solve. Returns (users, items).
-    */
-  def factorsImplicit(ratings: DataFrame, alpha: Long = 40L): (DataFrame, DataFrame) = {
-    val capped = ratings.localCheckpoint(true)
-    val it0 = initItemFactors(capped.select(col("item_id")).distinct())
-      .localCheckpoint(true)
-    val us1 = halfSolveImplicit(capped, it0, "item_id", "user_id", alpha)
-      .localCheckpoint(true)
-    val it2 = halfSolveImplicit(capped, us1, "user_id", "item_id", alpha)
-      .localCheckpoint(true)
-    val us3 = halfSolveImplicit(capped, it2, "item_id", "user_id", alpha)
-    (us3, it2)
-  }
-
   /** Full replay: init items → solve users → solve items → solve users,
-    * each round pinned by eager localCheckpoint. Returns (users, items).
+    * each round pinned by eager localCheckpoint. `solve` is the
+    * half-solve, [[halfSolve]] (explicit) or [[halfSolveImplicit]]
+    * (Hu–Koren). Returns (users, items).
     */
-  def factors(ratings: DataFrame): (DataFrame, DataFrame) = {
+  def factors(
+      ratings: DataFrame,
+      solve: (DataFrame, DataFrame, String, String) => DataFrame = halfSolve
+  ): (DataFrame, DataFrame) = {
     val capped = ratings.localCheckpoint(true)
     val it0 = initItemFactors(capped.select(col("item_id")).distinct())
       .localCheckpoint(true)
-    val us1 = halfSolve(capped, it0, "item_id", "user_id").localCheckpoint(true)
-    val it2 = halfSolve(capped, us1, "user_id", "item_id").localCheckpoint(true)
-    val us3 = halfSolve(capped, it2, "item_id", "user_id")
+    val us1 = solve(capped, it0, "item_id", "user_id").localCheckpoint(true)
+    val it2 = solve(capped, us1, "user_id", "item_id").localCheckpoint(true)
+    val us3 = solve(capped, it2, "item_id", "user_id")
     (us3, it2)
   }
 

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *
   * Engine-exactness: domain loss means are single divisions of exact
   * BIGINT micro sums; excess is quantized to integer micros BEFORE the
-  * exp surrogate, so [[PseudoExp.chain]] (pure IEEE ·/+, the GmmReplay
+  * exp surrogate, so [[PseudoExp.pexp]] (pure IEEE ·/+, the GmmReplay
   * kernel) sees identical inputs; the τ=½ temperature baseline is
   * `sqrt` — correctly rounded by IEEE-754, unlike `pow`; boosted weights
   * quantize to e6 BIGINTs before the (order-free, exact) normalization
@@ -62,8 +62,7 @@ object Doremi {
             - col("ts").cast("double") / col("tn").cast("double"))
           + lit(0.5d)).cast("long"))
       .withColumn("_x", col("excess_e6").cast("double") / lit(1000000.0d))
-    val pe = PseudoExp.chain(ex, "_x", "_pexp")
-    val w = pe.withColumn("w_e6",
+    val w = ex.withColumn("_pexp", PseudoExp.pexp(col("_x"))).withColumn("w_e6",
       floor(sqrt(col("n_docs").cast("double") / col("tn").cast("double"))
         * col("_pexp") * lit(1000000.0d) + lit(0.5d)).cast("long"))
     val tw = w.agg(sum(col("w_e6")).as("tot_w"))

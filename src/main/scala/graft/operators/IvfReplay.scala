@@ -25,13 +25,17 @@ import org.apache.spark.sql.functions._
   *   - candidate scoring is the exact integer L2 between query and
   *     neighbor micros, top-k totally ordered by `(d2 ASC, neighbor_id)`.
   *
-  * Scale shape: the center table is nLists×d — a bounded driver object —
-  * and probes broadcast (|queries|·nProbe rows), so the corpus is touched
-  * by exactly (a) the per-round training scans (constant rounds) and
-  * (b) ONE posting-list equi-join on `cid` that scores only the probed
-  * lists' candidates (≈ nProbe/nLists of the corpus per query), never a
-  * full cross join. At 10⁹ vectors nLists grows with √corpus and the
-  * posting join stays the only corpus-sized shuffle.
+  * Scale shape: the center table is nLists×d — a bounded driver object
+  * that ships as one array literal
+  * ([[graft.functions.VectorFunctions.centerDistances]]), so a vector's
+  * posting list is `array_min` and a query's probes are the first
+  * `nProbe` of the sorted distance array: projections, never a join. The
+  * corpus is touched by exactly (a) the per-round training scans
+  * (constant rounds) and (b) ONE posting-list equi-join on `cid` against
+  * the broadcast probes (|queries|·nProbe rows), which scores only the
+  * probed lists' candidates (≈ nProbe/nLists of the corpus per query),
+  * never a full cross join. At 10⁹ vectors nLists grows with √corpus and
+  * the posting join stays the only corpus-sized shuffle.
   */
 object IvfReplay {
 
@@ -54,26 +58,20 @@ object IvfReplay {
       rounds: Int = 3,
       vecCol: String = "embedding",
       d: Int = 64): DataFrame = {
-    import spark.implicits._
     require(nProbe >= 1 && nProbe <= nLists, "need 1 <= nProbe <= nLists")
     val pts = KMeansReplay.quantize(corpus, vecCol, d).cache()
     try {
-      val centers = KMeansReplay.trainedCenters(spark, pts, nLists, rounds)
+      val centers = KMeansReplay.trainedCenters(pts, nLists, rounds)
       // posting lists: (neighbor_id, cid) + the micro vector for scoring
-      val posted = KMeansReplay.assign(spark, pts, centers)
-        .select(col("vec_id").as("neighbor_id"), col("cid"))
-        .join(pts.select(col("vec_id").as("neighbor_id"), col("xq").as("nx")),
-          Seq("neighbor_id"))
-      // probe selection: nProbe nearest centroids per query, exact metric
-      val cdf = centers.toDF("cid", "cx")
-      val cw = Window.partitionBy(col("query_id")).orderBy(col("cdist"), col("cid"))
+      val posted = pts.select(col("vec_id").as("neighbor_id"),
+        KMeansReplay.nearest(centers)("cid").as("cid"), col("xq").as("nx"))
+      // probe selection: nProbe nearest centroids per query, exact metric,
+      // ties to the smaller cid
       val probes = KMeansReplay.quantize(queries, vecCol, d)
-        .select(col("vec_id").as("query_id"), col("xq").as("qx"))
-        .crossJoin(broadcast(cdf))
-        .withColumn("cdist", sqDist(col("qx"), col("cx")))
-        .withColumn("prk", row_number().over(cw))
-        .filter(col("prk") <= nProbe)
-        .select(col("query_id"), col("qx"), col("cid"))
+        .select(col("vec_id").as("query_id"), col("xq").as("qx"),
+          explode(slice(sort_array(graft.functions.VectorFunctions.centerDistances(
+            col("xq"), centers)), 1, nProbe)).as("p"))
+        .select(col("query_id"), col("qx"), col("p.cid").as("cid"))
       // score ONLY the probed lists' candidates; top-k per query
       val w = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("neighbor_id"))
       posted

@@ -18,11 +18,14 @@ import org.apache.spark.sql.functions._
   * ordered, so the greedy trajectory hash-oracles as an unrolled
   * round-per-CTE replay.
   *
-  * Scale shape: per round one broadcast of ≤ k (id, 64-long) centers +
-  * one codegen'd zip_with distance projection + one 1-row TakeOrdered —
-  * the [[ProductQuantization]] bounded-driver-object pattern; k·N·d work
-  * total, no pairwise N² anywhere. The quantized points are cached once
-  * for the k rounds.
+  * Scale shape: per round the ≤ k selected centers ship as one array
+  * literal ([[graft.functions.VectorFunctions.centerDistances]]), so a
+  * point's dmin is a projection over the cached point scan, a filter on
+  * a literal id array drops the selected points, and one 1-row
+  * TakeOrdered picks the next: one job per round, the
+  * [[ProductQuantization]] bounded-driver-object pattern; k·N·d work
+  * total, no pairwise N², no join and no shuffle anywhere.
+  * The final assignment is the same projection.
   */
 object KCenter {
 
@@ -37,21 +40,20 @@ object KCenter {
       d: Int = 64,
       k: Int = 8
   ): DataFrame = {
-    import spark.implicits._
     require(k >= 1, "k must be >= 1")
     val pts = KMeansReplay.quantize(df, vecCol, d).cache()
     try {
-      val first = pts
-        .withColumn("h", md5(col("vec_id").cast("string")))
-        .orderBy(col("h"), col("vec_id")).limit(1)
-        .collect()
+      val first = KMeansReplay.md5Ranked(pts, 1)
       require(first.nonEmpty, "KCenter.greedyCoreset: empty input")
       var selected = Seq(
         (first(0).getLong(0), first(0).getSeq[Long](first(0).fieldIndex("xq"))))
       while (selected.size < k) {
-        val selDf = broadcast(selected.map(_._1).toDF("sid"))
-        val far = dmin(pts, selected)
-          .join(selDf, col("vec_id") === col("sid"), "left_anti")
+        // min over the non-null distances, as a SQL min: array_min skips
+        // a center whose distance is null
+        val dmin = array_min(transform(
+          graft.functions.VectorFunctions.centerDistances(col("xq"), selected), _("dist")))
+        val far = pts.select(col("vec_id"), dmin.as("dmin"), col("xq"))
+          .where(!array_contains(typedLit(selected.map(_._1)), col("vec_id")))
           .orderBy(desc("dmin"), col("vec_id"))
           .limit(1).collect()
         require(far.nonEmpty, s"KCenter.greedyCoreset: fewer than $k points")
@@ -59,37 +61,15 @@ object KCenter {
         selected = selected :+
           ((r.getLong(r.fieldIndex("vec_id")), r.getSeq[Long](r.fieldIndex("xq"))))
       }
-      val selFrame = selected.zipWithIndex
-        .map { case ((id, cx), i) => (id, cx, i + 1) }
-        .toDF("c_id", "cx", "sel_rank")
-      pts.crossJoin(broadcast(selFrame))
-        // native Σ(Δ²) kernel — HOF-parity pinned (LongSqDistParitySpec)
-        .withColumn("d2",
-          graft.functions.VectorFunctions.sqDistLong(col("xq"), col("cx")))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("d2"), col("c_id"))).as("m"))
-        .join(broadcast(selFrame.select(col("c_id").as("vec_id"),
-          col("sel_rank"))), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("m").getField("c_id").as("nearest_center"),
-          col("m").getField("d2").as("d2"),
-          coalesce(col("sel_rank"), lit(0)).as("sel_rank"))
+      // sel_rank: array_position is 1-based, 0 when absent
+      KMeansReplay.assign(pts, selected)
+        .select(col("vec_id"), col("cid").as("nearest_center"), col("dist").as("d2"),
+          array_position(typedLit(selected.map(_._1)), col("vec_id")).cast("int")
+            .as("sel_rank"))
       // cache lifecycle: the k greedy rounds have materialized `pts`; the
       // returned frame reads it lazily one final time — session hygiene
       // (Bench/Verify clearCache per query) or the caller releases it
       // (the SubstringDedup.windowHashes convention).
     } catch { case t: Throwable => pts.unpersist(blocking = false); throw t }
-  }
-
-  /** Exact integer distance² to the nearest of `selected`, per point. */
-  private def dmin(pts: DataFrame, selected: Seq[(Long, Seq[Long])]): DataFrame = {
-    import pts.sparkSession.implicits._
-    val cdf = broadcast(selected.toDF("c_id", "cx"))
-    pts.crossJoin(cdf)
-      .withColumn("d2",
-        graft.functions.VectorFunctions.sqDistLong(col("xq"), col("cx")))
-      .groupBy(col("vec_id"))
-      .agg(min(col("d2")).as("dmin"))
-      .join(pts, Seq("vec_id"))
-      .select(col("vec_id"), col("dmin"), col("xq"))
   }
 }

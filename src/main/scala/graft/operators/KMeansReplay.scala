@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Replayable k-means — fixed-round Lloyd iterations that BOTH engines can
@@ -15,19 +15,21 @@ import org.apache.spark.sql.functions._
   *     EXACT BIGINT sum of squares (associative, partition-order-free).
   *   - Seeds are the k vectors of rank < k under `md5(CAST(vec_id AS
   *     STRING))` order (vec_id tie-break), cluster id = rank.
-  *   - Assignment ties break on the smaller center id (min of a
-  *     (dist, cid) struct ≡ ORDER BY dist, cid LIMIT 1).
+  *   - Assignment ties break on the smaller center id (`array_min` of
+  *     the (dist, cid) structs ≡ ORDER BY dist, cid LIMIT 1).
   *   - Center update is rounded integer division `floor(S/n + 0.5)`:
   *     S ≤ n·10⁶ and n both sit far below 2⁵³, so the single double
   *     division replays identically in DuckDB.
   *   - Empty clusters drop — both engines' GROUP BY sees the same absence.
   *
-  * Scale: each round is one broadcast cross join (k center rows) against
-  * the fact scan plus a map-side-combined integer aggregation; the k×d
-  * center table is a bounded driver object (the PCA power-iteration /
-  * PQ-codebook pattern); seeding is TakeOrdered, not a global sort. At
-  * 100 TB the per-round scan dominates and parallelizes; `rounds` is a
-  * small constant.
+  * Scale shape: the k×d center table is a bounded driver object (the
+  * PCA power-iteration / PQ-codebook pattern) that ships as one array
+  * literal ([[graft.functions.VectorFunctions.centerDistances]]), so the
+  * nearest center is a per-row projection — no join, no shuffle, and the
+  * same plan every round. A round is one map-side-combined `(cid, pos)`
+  * integer aggregation over the cached point scan; seeding is
+  * TakeOrdered, not a global sort. At 100 TB the per-round scan
+  * dominates and parallelizes; `rounds` is a small constant.
   */
 object KMeansReplay {
 
@@ -45,94 +47,68 @@ object KMeansReplay {
         ).as("xq"))
 
   /** Nearest-center assignment under the exact-integer distance:
-    * `(vec_id, cid, dist)`, ties to the smaller cid.
+    * `(vec_id, cid, dist)`, ties to the smaller cid. One projection over
+    * `pts`: no join, no shuffle.
     */
-  private[operators] def assign(
-      spark: SparkSession,
-      pts: DataFrame,
-      centers: Seq[(Long, Seq[Long])]): DataFrame = {
-    import spark.implicits._
-    val cdf = centers.toDF("cid", "cx")
-    pts
-      .crossJoin(broadcast(cdf))
-      // native Σ(Δ²) kernel — exact integers, HOF-parity pinned
-      // (LongSqDistParitySpec); the boxed aggregate(zip_with(...)) spelling
-      // dominated the per-round cross-join cost (guide §4)
-      .withColumn(
-        "dist",
-        graft.functions.VectorFunctions.sqDistLong(col("xq"), col("cx")))
-      .groupBy("vec_id")
-      .agg(min(struct(col("dist"), col("cid"))).as("m"))
+  private[operators] def assign(pts: DataFrame, centers: Seq[(Long, Seq[Long])]): DataFrame =
+    pts.select(col("vec_id"), nearest(centers).as("m"))
       .select(col("vec_id"), col("m.cid").as("cid"), col("m.dist").as("dist"))
-  }
+
+  /** The nearest of `centers` to each point's `xq`: a `(dist, cid)` struct. */
+  private[operators] def nearest(centers: Seq[(Long, Seq[Long])]): Column =
+    array_min(graft.functions.VectorFunctions.centerDistances(col("xq"), centers))
+
+  /** The `n` rows of `df` first under `(md5(CAST(vec_id AS STRING)),
+    * vec_id)`: the deterministic, RNG-free pick of the replay family's
+    * seeds and samples. One TakeOrdered job, not a global sort.
+    */
+  private[operators] def md5Ranked(df: DataFrame, n: Int): Array[Row] =
+    df.withColumn("h", md5(col("vec_id").cast("string")))
+      .orderBy(col("h"), col("vec_id"))
+      .limit(n)
+      .collect()
 
   /** md5-ranked deterministic seeds: the k points of rank < k, cid = rank. */
-  private def seedCenters(pts: DataFrame, k: Int): Seq[(Long, Seq[Long])] =
-    pts
-      .withColumn("h", md5(col("vec_id").cast("string")))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(k)
-      .collect()
-      .toSeq
-      .zipWithIndex
+  private[operators] def seedCenters(pts: DataFrame, k: Int): Seq[(Long, Seq[Long])] =
+    md5Ranked(pts, k).toSeq.zipWithIndex
       .map { case (r, i) => (i.toLong, r.getSeq[Long](r.fieldIndex("xq"))) }
 
   /** The round-`rounds` center table over a pre-quantized `(vec_id, xq)`
     * frame — the bounded driver object the final assignment (and the IVF
     * coarse quantizer, [[IvfReplay]]) score against. Callers should cache
-    * `pts`; each round is ONE job over a single `pts` scan — the argmin
-    * aggregate carries `xq` through (`first` over rows that all share the
-    * point's xq, so the value is deterministic), which removes the
-    * assign-then-rejoin second scan a round used to pay.
+    * `pts`; each round is one aggregate over a single `pts` scan.
     */
   private[operators] def trainedCenters(
-      spark: SparkSession,
       pts: DataFrame,
       k: Int,
-      rounds: Int): Seq[(Long, Seq[Long])] = {
-    var centers = seedCenters(pts, k)
-    var r = 0
-    while (r < rounds) {
-      centers = lloydRound(spark, pts, centers)
-      r += 1
-    }
-    centers
-  }
+      rounds: Int): Seq[(Long, Seq[Long])] =
+    (0 until rounds).foldLeft(seedCenters(pts, k))((centers, _) => lloydRound(pts, centers))
 
-  /** One Lloyd update: assign + k·d (cid, pos) partial sums in a single
-    * `pts` scan (the argmin aggregate carries xq through), new centers as
-    * rounded integer divisions — a bounded driver object, exact longs.
+  /** One Lloyd update: each point's nearest cid is a projection, so the
+    * round is one `(cid, pos)` aggregate of exact sums over a `pts` scan;
+    * new centers are rounded integer divisions — a bounded driver object,
+    * exact longs.
     */
   private def lloydRound(
-      spark: SparkSession,
       pts: DataFrame,
-      centers: Seq[(Long, Seq[Long])]): Seq[(Long, Seq[Long])] = {
-    import spark.implicits._
-    val cdf = centers.toDF("cid", "cx")
-    val stats = pts
-      .crossJoin(broadcast(cdf))
-      .withColumn(
-        "dist",
-        graft.functions.VectorFunctions.sqDistLong(col("xq"), col("cx")))
-      .groupBy("vec_id")
-      .agg(min(struct(col("dist"), col("cid"))).as("m"), first(col("xq")).as("xq"))
-      .select(col("m.cid").as("cid"), posexplode(col("xq")))
+      centers: Seq[(Long, Seq[Long])]): Seq[(Long, Seq[Long])] =
+    pts
+      // cid is projected before the explode: a select beside a generator
+      // would score the centers again for every exploded element
+      .select(nearest(centers)("cid").as("cid"), col("xq"))
+      .select(col("cid"), posexplode(col("xq")))
       .groupBy("cid", "pos")
       .agg(sum("col").as("s"), count(lit(1)).as("n"))
       .collect()
-    stats
       .groupBy(_.getLong(0))
       .toSeq
       .map { case (cid, rows) =>
         val dims = rows.sortBy(_.getInt(1)).map { row =>
-          val s = row.getLong(2)
-          val n = row.getLong(3)
-          math.floor(s.toDouble / n.toDouble + 0.5).toLong
+          math.floor(row.getLong(2).toDouble / row.getLong(3).toDouble + 0.5).toLong
         }
         (cid, dims.toSeq)
       }
       .sortBy(_._1)
-  }
 
   /** Final per-point assignment after `rounds` center updates:
     * `(vec_id, cid, dist)` against the round-`rounds` centers.
@@ -146,10 +122,10 @@ object KMeansReplay {
       rounds: Int): DataFrame = {
     val pts = quantize(df, vecCol, d).cache()
     try {
-      val centers = trainedCenters(spark, pts, k, rounds)
+      val centers = trainedCenters(pts, k, rounds)
       // The returned plan may recompute pts after unpersist — assignment is
       // deterministic, so laziness stays safe.
-      assign(spark, pts, centers)
+      assign(pts, centers)
     } finally pts.unpersist()
   }
 

@@ -76,6 +76,8 @@ object ProductQuantization {
       else sliced.sample(withReplacement = false, trainFraction, seed)
     trainSet.persist()
     try {
+      require(!trainSet.isEmpty,
+        "ProductQuantization.train: empty corpus, no vector to fit the codebooks on")
       (0 until m).toArray.map { s =>
         new KMeans().setK(k).setSeed(seed + s)
           .setInitMode("random").setMaxIter(maxIter)
@@ -120,14 +122,9 @@ object ProductQuantization {
     val dsub = dim / m
     val xq = transform(asDouble(col(vecCol)),
       e => floor(e * lit(1000000.0d) + lit(0.5d)).cast("long"))
-    val sample: Array[Array[Long]] = corpus
-      .select(col(idCol).as("vec_id"), xq.as("xq"))
-      .withColumn("h", md5(col("vec_id").cast("string")))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(sampleN)
-      .select(col("xq"))
-      .collect()
-      .map(_.getSeq[Long](0).toArray)
+    val sample: Array[Array[Long]] =
+      KMeansReplay.md5Ranked(corpus.select(col(idCol).as("vec_id"), xq.as("xq")), sampleN)
+        .map(_.getSeq[Long](1).toArray)
     require(sample.length >= k, s"corpus has only ${sample.length} rows, need $k")
     (0 until m).toArray.map { s =>
       val slices = sample.map(_.slice(s * dsub, s * dsub + dsub))

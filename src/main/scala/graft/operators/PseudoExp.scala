@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The engine-exact exp surrogate shared by [[GmmReplay]] and [[Doremi]]:
@@ -14,18 +14,13 @@ object PseudoExp {
   val Squarings = 16
   val PexpBase: Double = (1L << Squarings).toDouble // 65536
 
-  /** pexp as a named-column chain: each squaring references the PREVIOUS
-    * named column, keeping the Catalyst tree linear (a self-referencing
-    * fold would build a 2^16-node tree).
+  /** pexp(x): the seed 1 + x/2¹⁶, then 16 squarings, as one `aggregate`
+    * over a constant 16-element array. The tree stays linear and
+    * constant-size (a self-referencing fold of columns would build a
+    * 2^16-node tree), and it nests inside a lambda: `transform(xs, pexp)`
+    * is pexp of every element.
     */
-  def chain(df: DataFrame, xCol: String, outCol: String): DataFrame = {
-    val seeded = df.withColumn(s"${outCol}_p0",
-      lit(1.0d) + col(xCol) / lit(PexpBase))
-    val chained = (1 to Squarings).foldLeft(seeded) { (d, i) =>
-      d.withColumn(s"${outCol}_p$i",
-        col(s"${outCol}_p${i - 1}") * col(s"${outCol}_p${i - 1}"))
-    }
-    chained.withColumn(outCol, col(s"${outCol}_p$Squarings"))
-      .drop((0 to Squarings).map(i => s"${outCol}_p$i"): _*)
-  }
+  def pexp(x: Column): Column =
+    aggregate(sequence(lit(1), lit(Squarings)), lit(1.0d) + x / lit(PexpBase),
+      (p, _) => p * p)
 }

@@ -43,6 +43,8 @@ object SemanticDedup {
     val train =
       if (trainFraction >= 1.0) vec
       else vec.sample(withReplacement = false, trainFraction, seed)
+    require(!train.isEmpty,
+      "SemanticDedup.pairs: empty input, no vector to fit the k-means clusters on")
     val model = new KMeans().setK(nClusters).setSeed(seed)
       .setInitMode("random").setMaxIter(maxIter)
       .setFeaturesCol("features").setPredictionCol("cluster_id")
@@ -118,8 +120,8 @@ object SemanticDedup {
         if (idCol == "vec_id") c else c.withColumnRenamed(idCol, "vec_id"), vecCol, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val centers = KMeansReplay.trainedCenters(spark, pts, k, rounds)
-      val assigned = KMeansReplay.assign(spark, pts, centers)
+      val centers = KMeansReplay.trainedCenters(pts, k, rounds)
+      val assigned = KMeansReplay.assign(pts, centers)
         .select(col("vec_id").as(idCol), col("cid").as("cluster_id"))
         .join(c, Seq(idCol))
         .localCheckpoint(true)

@@ -130,10 +130,10 @@ object Similarity {
     * The float path keeps the true Gaussian recall profile and stays
     * spec-covered (SimilaritySpec).
     *
-    * Scale shape matches [[lshKnn]]: the sign table is nTables·nPlanes·d
-    * broadcast rows, signatures one exploded aggregation per vector, and
-    * the candidate join bucket-equi with the (small) probe side broadcast
-    * — never all-pairs.
+    * Scale shape matches [[lshKnn]]: a vector's nTables signatures are
+    * one projection ([[hyperplaneBucketLong]] against literal planes, no
+    * join and no shuffle), and the candidate join is bucket-equi with the
+    * (small) probe side broadcast — never all-pairs.
     */
   def lshKnnDet(
       queries: DataFrame,
@@ -145,30 +145,13 @@ object Similarity {
       seed: Long = 42L
   ): DataFrame = {
     require(nPlanes >= 1 && nPlanes <= 30, "nPlanes in 1..30")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val planes = broadcast(
-      (0 until nTables).flatMap { t =>
-        gaussianMicroPlanes(nPlanes, d, seed + t).zipWithIndex.flatMap {
-          case (p, b) => p.zipWithIndex.map { case (g, j0) => (t, b, j0 + 1, g) }
-        }
-      }.toDF("t", "b", "j", "s"))
-    // per (vector, table): exact-integer projections -> packed sign bits
-    def withBuckets(df: DataFrame): DataFrame = {
-      val quant = KMeansReplay.quantize(df, "embedding", d)
-      val proj = quant
-        .select(col("vec_id"), posexplode(col("xq")).as(Seq("pos", "x")))
-        .withColumn("j", col("pos") + 1)
-        .join(planes, Seq("j"))
-        .groupBy(col("vec_id"), col("t"), col("b"))
-        .agg(sum(col("s") * col("x")).as("proj"))
-      proj
-        .groupBy(col("vec_id"), col("t"))
-        .agg(sum(when(col("proj") >= 0L,
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(b AS INT))"))
-          .otherwise(lit(0L))).as("bucket"))
-        .join(quant, Seq("vec_id"))
-    }
+    // per (vector, table): the packed sign bits of the exact projections
+    def withBuckets(df: DataFrame): DataFrame =
+      KMeansReplay.quantize(df, "embedding", d)
+        .select(col("vec_id"), col("xq"), explode(array((0 until nTables).map(t =>
+          struct(lit(t).as("t"), hyperplaneBucketLong(col("xq"),
+            gaussianMicroPlanes(nPlanes, d, seed + t)).as("bucket"))): _*)).as("tb"))
+        .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"), col("xq"))
     val c = withBuckets(corpus)
       .select(col("vec_id").as("neighbor_id"), col("t"), col("bucket"), col("xq").as("nx"))
     val flips = lit(0L) +: (0 until nPlanes).map(j => lit(1L << j))
@@ -236,6 +219,8 @@ object Similarity {
     // k-means pass is a full scan of the train set — at this corpus size
     // job-overhead-bound, at 100 TB scan-bound. Recall is governed by
     // nProbe, not quantizer polish.
+    require(!trainSet.isEmpty,
+      "Similarity.ivfKnn: empty corpus, no vector to train the coarse quantizer on")
     val model = new KMeans().setK(nLists).setSeed(seed)
       .setInitMode("random").setMaxIter(maxIter)
       .setFeaturesCol("features").setPredictionCol("list_id")
@@ -295,9 +280,9 @@ object Similarity {
     *     `dot > 0 ∧ 4·dot² ≥ ‖a‖²·‖b‖²` in identical IEEE doubles, and the
     *     reported cosine is one replayed floor-6 division chain.
     *
-    * Scale shape: the sign table is nPlanes·d rows (broadcast), the
-    * signature is one exploded aggregation per vector, and the pair join
-    * is bucket-equi with the same hot-bucket cap — never all-pairs.
+    * Scale shape: the nPlanes·d signs are driver constants, the signature
+    * is one projection per vector ([[hyperplaneBucketLong]]), and the pair
+    * join is bucket-equi with the same hot-bucket cap — never all-pairs.
     */
   def simhashNearDupPairs(
       df: DataFrame,
@@ -307,29 +292,19 @@ object Similarity {
       vecCol: String = "embedding",
       maxBucketSize: Int = 10000
   ): DataFrame = {
-    require(nPlanes >= 1 && nPlanes <= 30, "nPlanes in 1..30")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val signs = broadcast(
-      (0 until nPlanes).flatMap(b => (1 to d).map(j => (b, j))).toDF("b", "j")
-        .withColumn("s",
-          when(conv(substring(md5(concat(col("b"), lit(":"), col("j"))), 1, 1), 16, 10)
-            .cast("int") % 2 === 0, lit(1L)).otherwise(lit(-1L))))
-    val quant = KMeansReplay.quantize(df.select(col(idCol).as("vec_id"), col(vecCol)),
-      vecCol, d)
-    val proj = quant
-      .select(col("vec_id"), posexplode(col("xq")).as(Seq("pos", "x")))
-      .withColumn("j", col("pos") + 1)
-      .join(signs, Seq("j"))
-      .groupBy(col("vec_id"), col("b"))
-      .agg(sum(col("s") * col("x")).as("proj"))
-    bucketVerifyPairs(quant, proj, maxBucketSize)
+    def sign(b: Int, j: Int): Long = {
+      val digest = java.security.MessageDigest.getInstance("MD5")
+        .digest(s"$b:$j".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      if (((digest(0) >> 4) & 1) == 0) 1L else -1L
+    }
+    bucketVerifyPairs(df, idCol, vecCol, d,
+      (0 until nPlanes).map(b => (1 to d).map(j => sign(b, j))), maxBucketSize)
   }
 
   /** Deterministic-REPLAY spelling of [[cosineNearDupPairs]] (the
     * q_semantic_dedup_det discipline): the SAME seeded Gaussian hyperplanes
-    * — but quantized to integer micros and shipped as 512 literal rows —
-    * over integer-micro coordinates, so the bucket signature is an exact
+    * — but quantized to integer micros and shipped as literals — over
+    * integer-micro coordinates, so the bucket signature is an exact
     * BIGINT function and the cos ≥ ½ verification the shared IEEE spelling
     * both engines replay bit-for-bit. The float path keeps the LSH recall
     * profile of the Gaussian planes (unlike the Rademacher signs of
@@ -345,40 +320,25 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       maxBucketSize: Int = 10000
-  ): DataFrame = {
-    require(nPlanes >= 1 && nPlanes <= 30, "nPlanes in 1..30")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val planes = broadcast(
-      gaussianMicroPlanes(nPlanes, d, seed).zipWithIndex
-        .flatMap { case (p, b) => p.zipWithIndex.map { case (g, j0) => (b, j0 + 1, g) } }
-        .toDF("b", "j", "s"))
-    val quant = KMeansReplay.quantize(df.select(col(idCol).as("vec_id"), col(vecCol)),
-      vecCol, d)
-    val proj = quant
-      .select(col("vec_id"), posexplode(col("xq")).as(Seq("pos", "x")))
-      .withColumn("j", col("pos") + 1)
-      .join(planes, Seq("j"))
-      .groupBy(col("vec_id"), col("b"))
-      .agg(sum(col("s") * col("x")).as("proj"))
-    bucketVerifyPairs(quant, proj, maxBucketSize)
-  }
+  ): DataFrame =
+    bucketVerifyPairs(df, idCol, vecCol, d, gaussianMicroPlanes(nPlanes, d, seed),
+      maxBucketSize)
 
-  /** Shared tail of the replayable near-dup spellings: pack the per-plane
-    * sign bits into the bucket id, cap hot buckets, bucket-equi pair join,
-    * exact-integer cos ≥ ½ verification (`d > 0 ∧ 4d² ≥ ‖a‖²‖b‖²` in
-    * identical IEEE doubles), floor-6 reported cosine.
+  /** Shared body of the replayable near-dup spellings: quantize, pack the
+    * per-plane sign bits into the bucket id, cap hot buckets, bucket-equi
+    * pair join, exact-integer cos ≥ ½ verification (`d > 0 ∧ 4d² ≥
+    * ‖a‖²‖b‖²` in identical IEEE doubles), floor-6 reported cosine.
     */
   private def bucketVerifyPairs(
-      quant: DataFrame,
-      proj: DataFrame,
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      d: Int,
+      planes: Seq[Seq[Long]],
       maxBucketSize: Int): DataFrame = {
-    val sig = proj
-      .groupBy(col("vec_id"))
-      .agg(sum(when(col("proj") >= 0L,
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(b AS INT))"))
-        .otherwise(lit(0L))).as("bucket"))
-    val b = sig.join(quant, Seq("vec_id"))
+    require(planes.nonEmpty && planes.size <= 30, "nPlanes in 1..30")
+    val b = KMeansReplay.quantize(df.select(col(idCol).as("vec_id"), col(vecCol)), vecCol, d)
+      .select(col("vec_id"), col("xq"), hyperplaneBucketLong(col("xq"), planes).as("bucket"))
       .withColumn("bucket_n", count(lit(1)).over(Window.partitionBy(col("bucket"))))
       .filter(col("bucket_n") <= maxBucketSize)
       .drop("bucket_n")

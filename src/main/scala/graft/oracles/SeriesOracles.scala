@@ -369,7 +369,7 @@ private[graft] object SeriesOracles {
     // TREE SUBSTITUTION, so 16 chained squarings in one SELECT become a
     // 2¹⁶-node expression (23 s planning, measured) — one materialized CTE
     // per squaring keeps the tree linear (0.7 s). Same reason the Scala
-    // side chains named columns (GmmReplay.withPexp).
+    // side folds the squarings in one `aggregate` (PseudoExp.pexp).
     def eStep(r: Int): String = {
       val pexpCtes = (1 to 16).map(i =>
         s"px${r}_$i AS MATERIALIZED (SELECT vec_id, cid, piq, p * p AS p FROM px${r}_${i - 1})")

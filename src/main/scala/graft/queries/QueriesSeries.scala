@@ -296,7 +296,8 @@ private[graft] object QueriesSeries {
     // Long once the global Gram grows with entity count; one rounded
     // IEEE product is deterministic cross-engine, unlike a float sum)
     "q_als_implicit" -> { (s, d) =>
-      val (us, it) = graft.operators.AlsReplay.factorsImplicit(alsCappedRatings(s, d))
+      val (us, it) = graft.operators.AlsReplay.factors(alsCappedRatings(s, d),
+        graft.operators.AlsReplay.halfSolveImplicit(_, _, _, _))
       graft.operators.AlsReplay.recommend(us, it, 3)
     },
     // token-bucket admission per user (operators.RateLimit): event-time

@@ -27,11 +27,33 @@ class EmptyInputSpec extends AnyFunSuite {
       "q_pagerank", "q_ppr_contamination", "q_kcore", "q_lpa_communities",
       "q_dedup_components", "q_bpe_merges", "q_bytebpe_merges", "q_textrank_keywords",
       // the bounded-heap aggregate's consumers: no group, no heap
-      "q_topk_prices", "q_weighted_sample", "q_zipf_by_source", "q_zipf_drift"))
+      "q_topk_prices", "q_weighted_sample", "q_zipf_by_source", "q_zipf_drift",
+      // the replay vector family: no point, no seed, no center, no bucket
+      "q_kmeans_clusters", "q_knn_ivf_det", "q_ivf_recall", "q_rbo_ivf", "q_knn_lsh",
+      "q_cosine_neardup", "q_simhash_embed_neardup"))
     test(s"$q returns no row on empty tables") {
       val out = SparkEntry.queries(q)(spark, emptyDir)
       try assert(out.collect().isEmpty && out.columns.nonEmpty)
       finally GraftSession.release(spark)
+    }
+
+  test("q_cluster_nmi and q_cluster_ari on empty embeddings: one all-null row, as their oracles") {
+    for (q <- Seq("q_cluster_nmi", "q_cluster_ari"))
+      try {
+        val rows = SparkEntry.queries(q)(spark, emptyDir).collect()
+        assert(rows.length == 1 && rows(0).toSeq.forall(_ == null), q)
+      } finally GraftSession.release(spark)
+  }
+
+  for ((q, operator) <- Seq("q_kcenter_coreset" -> "KCenter.greedyCoreset",
+      "q_knn_ivf" -> "Similarity.ivfKnn", "q_knn_pq" -> "ProductQuantization.train",
+      "q_semantic_dedup" -> "SemanticDedup.pairs"))
+    test(s"$q on empty embeddings fails with a require that names the empty input") {
+      val e = intercept[IllegalArgumentException] {
+        try SparkEntry.queries(q)(spark, emptyDir).collect()
+        finally GraftSession.release(spark)
+      }
+      assert(e.getMessage.contains(operator) && e.getMessage.contains("empty"), e.getMessage)
     }
 
   test("q_zipf_slope on empty documents: one row, nw 0 and null moments, as its global-aggregate oracle") {

@@ -160,14 +160,28 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p.take(2000))
   }
 
-  test("deterministic IVF: no unbounded cartesian, centers are the only nested-loop sides") {
+  test("deterministic IVF: no center cross join, no sort aggregate, posting lists equi-joined") {
     val p = plan("q_knn_ivf_det")
-    assert(!p.contains("CartesianProduct"), s"no unbounded cartesian:\n${p.take(2000)}")
-    // the only nested-loop joins are the two bounded nLists-row center
-    // cross joins (probe selection + final assignment); candidate scoring
-    // must go through the cid equi-join, never a loop over the corpus
-    assert("BroadcastNestedLoopJoin".r.findAllIn(p).size <= 2, p.take(2000))
+    // posting lists and probes score the centers in one projection
+    // (centerDistances); candidate scoring goes through the cid equi-join
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      s"no center cross join:\n${p.take(2000)}")
+    assert(!p.contains("SortAggregate"), p.take(2000))
     assert(p.contains("BroadcastHashJoin"), s"posting-list equi-join expected:\n${p.take(2000)}")
+  }
+
+  test("replay clustering scores its centers in one projection: no cross join, no sort aggregate") {
+    for (q <- Seq("q_kmeans_clusters", "q_kcenter_coreset", "q_gmm_soft")) {
+      val p = plan(q)
+      assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+        s"$q:\n${p.take(2000)}")
+      assert(!p.contains("SortAggregate"), s"$q:\n${p.take(2000)}")
+    }
+  }
+
+  test("embedding simhash signatures are a projection: no Generate over the micros") {
+    val p = plan("q_simhash_embed_neardup")
+    assert(!p.contains("Generate"), p.take(2500))
   }
 
   test("per-source zipf top-N ships the bounded heap: partial min_k_by, no vocab window sort") {
@@ -409,13 +423,13 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("deterministic LSH kNN: probe side broadcast, sign table broadcast, no cartesian") {
+  test("deterministic LSH kNN: probe side broadcast, no cartesian, no nested loop") {
     val p = plan("q_knn_lsh")
     assert(p.contains("BroadcastHashJoin"),
       s"the (t, bucket) candidate join must broadcast the probe side:\n${p.take(2500)}")
     assert(!p.contains("CartesianProduct"), p.take(2500))
     assert(!p.contains("BroadcastNestedLoopJoin"),
-      s"every join must be an equi-join (bucket/plane keys):\n${p.take(2500)}")
+      s"every join must be an equi-join (bucket keys):\n${p.take(2500)}")
   }
 
   test("byte-BPE symbolization: the hex->symbol map is a zero-join projection") {
