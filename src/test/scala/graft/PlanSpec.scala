@@ -160,7 +160,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p.take(2000))
   }
 
-  test("deterministic IVF: no center cross join, no sort aggregate, posting lists equi-joined") {
+  test("deterministic IVF: no center cross join, no sort aggregate, posting-list equi-join") {
     val p = plan("q_knn_ivf_det")
     // posting lists and probes score the centers in one projection
     // (centerDistances); candidate scoring goes through the cid equi-join
